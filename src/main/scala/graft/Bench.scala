@@ -1,519 +1,231 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.nio.file.{Files, Paths}
+
+import graft.harness.{BenchCore, Canary}
+import graft.harness.BenchCore._
 
 /** Benchmark harness: runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line. A failing query is
   * recorded as "err" and excluded from the total, so the headline number
   * only ever sums successful runs.
   *
-  * Noise armor: after the cold pass, every query is timed on THREE warm
-  * passes, each in a different (seed-fixed) shuffled order, and the
-  * per-query warm time is the minimum of the three. A one-off load spike
-  * on the host (the driver box has recorded 2-2.6× inflation in past
-  * rounds) then dents at most one sample of each query instead of its
-  * only sample, and order shuffling keeps a spike from always taxing the
-  * same neighbors. Round 15 adds active defense: each warm pass first
-  * measures EXTERNAL load (/proc/stat minus /proc/self/stat over 1 s —
-  * loadavg can't split self from other); a pass starting above the bar
-  * (cores/4, GRAFT_BENCH_LOAD_BAR to override) still feeds the min but
-  * triggers a replacement pass, up to two extras. Round 18 adds the
-  * drift canary ([[graft.harness.Canary]]): a fixed code-independent
-  * probe timed before the cold pass and each warm pass, stamped as
-  * `canary_s`/`canary_min` on the headline — with the committed
-  * quiet-host basis (BASELINE §drift-canary) that separates box drift
-  * from code regressions by arithmetic.
+  * Protocol ([[BenchCore.Protocol]]): a cold pass, then seed-shuffled warm
+  * passes until three start on a quiet host (at most five), each query's
+  * warm time the minimum over the passes. A load spike then dents at most
+  * one sample of each query, and order shuffling keeps it from always
+  * taxing the same neighbors. Bench adds a pre-headline settle wait and a
+  * stability top-up. The drift canary ([[graft.harness.Canary]]) brackets
+  * every pass and is stamped as `canary_s`/`canary_min` on the headline;
+  * with the committed quiet-host basis (BASELINE §drift-canary) that
+  * separates box drift from code regressions by arithmetic.
   */
 object Bench {
   private val WarmPasses = 3
+  private val MaxPasses = 5
+  private val Sf1Dir = "target/testdata/sf1.0"
+
+  /** Everything the two artifacts are rendered from. */
+  final case class Report(
+      m: Measured,
+      canary: Seq[(String, Any)],
+      sf1: Map[String, Double],
+      sf1Total: Double,
+      sf1Full: Boolean,
+      sf1Budgeted: Boolean,
+      settleS: Double,
+      outputRows: Map[String, Long],
+      prevWarm: Map[String, Double],
+      loadBar: Double,
+      budgetS: Double,
+      sfDir: String)
 
   def main(args: Array[String]): Unit = {
-    // Wall-clock budget (r15 verdict finding 1): the r15 driver bench was
-    // killed at its timeout (rc=124, no JSON line) because the full-sf1.0
-    // and streaming sections defaulted ON and ~4×'d the wall. The budget
-    // gates every OPTIONAL section — before starting one, the remaining
-    // budget must cover that section's estimated cost, otherwise it is
-    // skipped with a visible flag in the headline instead of the whole
-    // artifact dying unparsed. The sf0.1 suite itself (the graded
-    // headline) is never skipped.
-    val wallStart = System.nanoTime()
-    def elapsedS(): Double = (System.nanoTime() - wallStart) / 1e9
-    val budgetS = sys.env.get("GRAFT_BENCH_BUDGET_S").map(_.toDouble)
-      .getOrElse(2400.0)
-    def remainingS(): Double = budgetS - elapsedS()
+    // The budget gates every OPTIONAL section: before starting one, the
+    // remainder must cover its estimated cost, otherwise it is skipped with
+    // a visible flag instead of the whole artifact dying unparsed at the
+    // caller's timeout. The sf0.1 suite itself is never skipped.
+    val budget = new Budget(2400.0)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Same decade-scale auto-raise as Verify (r16 verdict item 3): at the
-    // sf10 fixture, `cpus` shuffle partitions put ~1M wide rows in one
-    // task's sort; 128 is the documented probe protocol.
-    val shuffleParts = sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS",
-      try {
-        val li = java.nio.file.Paths.get(s"$sfDir/lineitem.parquet")
-        if (java.nio.file.Files.exists(li) &&
-          java.nio.file.Files.size(li) > 512L * 1024 * 1024) "128" else cpus
-      } catch { case _: Throwable => cpus })
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: the consumer tails the run's output, and DAGScheduler
-    // "broadcasting large task binary" WARN lines would crowd out the one
-    // JSON result line.
-    spark.sparkContext.setLogLevel("ERROR")
-    // Absorb session/codegen/Hadoop warmup so the first measured query is
-    // not charged ~3 s of one-time setup. Best-effort: a missing warmup
-    // table must not abort the benchmark.
-    try {
-      spark.range(1000).selectExpr("sum(id)").collect()
-      spark.read.parquet(s"$sfDir/region.parquet").count()
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] warmup skipped: ${e.getMessage}")
-    }
+    val spark = session(cpus, shufflePartitions(sfDir, cpus))
+    warmup(spark, sfDir, "bench")
     val fns = SparkEntry.queries
     // GRAFT_BENCH_FILTER: name regex for fast local smoke runs of the
-    // harness itself (budget gating, JSON shape) — never set by the driver.
+    // harness itself (budget gating, JSON shape).
     val nameFilter = sys.env.get("GRAFT_BENCH_FILTER").map(_.r)
     val names = fns.keys.toSeq
       .filter(n => nameFilter.forall(_.findFirstIn(n).isDefined))
+    val bar = loadBar(cpus)
 
-    // 1-minute load average, sampled around every pass: the r10 judge saw
-    // 15-20% warm drift on carried queries at unknown host load — per-pass
-    // load in the detail file lets a later reader separate "the host was
-    // busy during pass 2" from a genuine regression without a re-run.
-    def loadNow(): String =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString
-        .split("\\s+").head
-      catch { case _: Throwable => "na" }
-
-    // EXTERNAL contention, measured directly: busy jiffies across all
-    // CPUs minus this JVM's own jiffies over a ~1 s window → cores busy
-    // with OTHER work right now. loadavg cannot make that separation —
-    // its 1-min EMA still carries our own just-finished pass, which is
-    // how the r14 artifact shipped an ~11 % load-inflated headline
-    // without tripping any bar (r14 verdict finding #1). −1 = unreadable.
-    // ticks/sec from the kernel, not a hardcoded 100 (r15 advice): on a
-    // non-100Hz USER_HZ kernel the cores estimate would be off by the
-    // ratio. One exec at startup; falls back to 100 if getconf is absent.
-    val clkTck: Double =
-      try {
-        val p = new ProcessBuilder("getconf", "CLK_TCK").start()
-        val out = new String(p.getInputStream.readAllBytes, "UTF-8").trim
-        p.waitFor()
-        val v = out.toDouble
-        if (v > 0) v else 100.0
-      } catch { case _: Throwable => 100.0 }
-    def externalLoad(windowMs: Long = 1000L): Double =
-      try {
-        def snap(): (Long, Long) = {
-          val cpu = scala.io.Source.fromFile("/proc/stat").getLines()
-            .next().trim.split("\\s+").drop(1).map(_.toLong)
-          // busy = user+nice+system+irq+softirq. Excluded: idle(3),
-          // iowait(4), steal(7) — hypervisor time, not co-tenant load on
-          // this host — and guest/guest_nice(8,9), which Linux already
-          // folds into user, so counting them would double-bill VM time
-          // (r15 advice).
-          val busy = cpu.take(3).sum +
-            (if (cpu.length > 6) cpu(5) + cpu(6) else 0L)
-          val self = scala.io.Source.fromFile("/proc/self/stat").mkString
-          val rest = self.substring(self.lastIndexOf(')') + 2).split(" ")
-          (busy, rest(11).toLong + rest(12).toLong) // utime + stime
-        }
-        val (b0, s0) = snap(); Thread.sleep(windowMs)
-        val (b1, s1) = snap()
-        // jiffies × (1000/CLK_TCK) ms-per-jiffy / windowMs = cores
-        math.max(0.0,
-          ((b1 - b0) - (s1 - s0)) * (1000.0 / clkTck) / windowMs)
-      } catch { case _: Throwable => -1.0 }
-
-    // Pre-headline settle (r16 verdict item 6): the driver invokes this
-    // bench right after heavier round phases (fixture regen, the
-    // correctness gate), and the r16 headline ran ~11% above the
-    // committed quiet-host basis with EXTERNAL load ~0 — the residue is
-    // the host still draining the driver's own just-finished work
-    // (dirty-page writeback, cooling, scheduler). Wait until the 1-min
-    // loadavg decays under half the core count (and external stays under
-    // the bar), bounded by GRAFT_BENCH_SETTLE_S of the budget; stamp the
-    // wait so the artifact shows it.
+    // Pre-headline settle: when invoked right after heavier work, the host
+    // is still draining it (writeback, scheduler) with external load ~0.
+    // Wait until the 1-min loadavg decays under half the core count (and
+    // external load stays under the bar), bounded by GRAFT_BENCH_SETTLE_S;
+    // the wait is stamped.
     val settleBudgetS = sys.env.get("GRAFT_BENCH_SETTLE_S").map(_.toDouble)
       .getOrElse(120.0)
     val settleStart = System.nanoTime()
-    val loadBarEarly = sys.env.get("GRAFT_BENCH_LOAD_BAR").map(_.toDouble)
-      .getOrElse(cpus.toDouble / 4.0)
     def settledS(): Double = (System.nanoTime() - settleStart) / 1e9
     while (settledS() < settleBudgetS && {
         val la = try loadNow().toDouble catch { case _: Throwable => 0.0 }
         val ext = externalLoad() // samples ~1 s by itself
-        la > cpus.toDouble / 2.0 || (ext >= 0 && ext > loadBarEarly)
+        la > cpus.toDouble / 2.0 || (ext >= 0 && ext > bar)
       }) Thread.sleep(2000)
     val settleS = settledS()
     if (settleS > 5)
       System.err.println(f"[bench] settled $settleS%.0f s before cold pass")
 
-    // Drift canary (r17 verdict item 1): a fixed, code-independent
-    // probe (graft.harness.Canary) timed before the cold pass and before
-    // every warm pass. The stamped canary_min, against the committed
-    // quiet-host basis in BASELINE §drift-canary, turns "is this round's
-    // headline code or box?" into arithmetic instead of a manual
-    // null-test re-run. Round 19 hardens the canary's own trust story
-    // (r18 verdict finding 1: the r18 samples spread 2.5×, failing the
-    // ≥3-samples-within-15% rule BASELINE asks readers to apply):
-    //   - TWO samples per site, so per-site GC/scheduler one-offs can't
-    //     make the whole run's canary list disagree (8+ samples/run);
-    //   - each site runs BEFORE the pass's gc/settle and external-load
-    //     sample (r18 advice: the canary's own garbage and its load
-    //     window must not be inherited by the timed pass);
-    //   - `canary_trusted` is STAMPED, computed from the documented
-    //     rule (≥3 post-warmup samples within 15% of the min), so
-    //     readers no longer eyeball the list. Failed samples are
-    //     dropped and counted in `canary_errors`, never stamped as
-    //     sentinel values (r18 advice on the StreamBench twin).
-    val canarySamples = scala.collection.mutable.ArrayBuffer[Double]()
-    var canaryErrors = 0
-    def runCanary(): Unit = (1 to 2).foreach { _ =>
-      try canarySamples += graft.harness.Canary.run(spark)
-      catch { case e: Throwable =>
-        canaryErrors += 1
-        System.err.println(s"[bench] canary failed: ${e.getMessage}")
-      }
-    }
-    // The trust rule lives in ONE place — graft.harness.Canary.trusted
-    // (r19 advice: five hand-copied inline versions could silently
-    // diverge).
-    def canaryTrusted: Boolean =
-      graft.harness.Canary.trusted(canarySamples.toSeq)
-    runCanary()
-    // The canary is allocation-heavy fixed work: collect its garbage
-    // before the timed cold pass starts (same breather the warm passes
-    // get), so the probe never taxes what it measures.
-    System.gc(); Thread.sleep(1500)
-
-    // noop sink, not count(): count() lets Catalyst prune every unused
-    // column, erasing the very work a pure-projection query exists to do
-    // (fingerprint/simhash/sha2 all vanish under a count). The noop sink
-    // fully evaluates every output row while writing nothing.
-    def timeIn(dir: String)(name: String): Option[Double] =
-      try {
-        val t0 = System.nanoTime()
-        fns(name)(spark, dir).write.format("noop").mode("overwrite").save()
-        Some((System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        None
-      }
-    def time(name: String): Option[Double] = timeIn(sfDir)(name)
-
-    // Cold pass (registration order): pays janino codegen compilation and
-    // JIT (~1-2 s for expression-heavy plans) — a fixed cost that amortizes
-    // to nothing at the 100 TB design point. Recorded so a compile-time
-    // regression (cold ≫ warm) stays visible; warm is the headline.
-    val passLoads = scala.collection.mutable.ArrayBuffer(loadNow())
-    val cold: Map[String, Double] =
-      names.flatMap(n => time(n).map(n -> _)).toMap
-    val coldOk = names.filter(cold.contains)
-    passLoads += loadNow()
-
-    // Warm passes: seed-fixed shuffles so reruns time the same orders.
-    // Load self-defense (r14 verdict item 6): each pass samples EXTERNAL
-    // load first; a pass starting above the bar still feeds the per-query
-    // min (extra samples never hurt a min) but does not count toward the
-    // WarmPasses quota — up to MaxExtraPasses replacements run until
-    // enough quiet-host passes exist. The headline stamps the passes
-    // actually used and their pre-pass external loads, so a loud run
-    // says "discount me" by itself instead of leaving triage to the
-    // reader of BASELINE.md.
-    val loadBar = sys.env.get("GRAFT_BENCH_LOAD_BAR").map(_.toDouble)
-      .getOrElse(cpus.toDouble / 4.0)
-    val MaxExtraPasses = 2
-    def warmPassesWithDefense(dir: String, qnames: Seq[String])
-        : (Seq[Map[String, Double]], Seq[Double], Int) = {
-      val buf = scala.collection.mutable.ArrayBuffer[Map[String, Double]]()
-      val pre = scala.collection.mutable.ArrayBuffer[Double]()
-      var quiet = 0
-      def runPass(): Unit = {
-        val pass = buf.size + 1
-        // Canary FIRST (r18 advice): it is allocation-heavy fixed work,
-        // so it must run before the gc/settle and the load sample — the
-        // timed pass then starts from the same post-GC quiet state as
-        // before round 18, and external load arriving during the
-        // canary's window is still caught by the pass's own sample.
-        runCanary()
-        // GC breather: the previous pass's (and the canary's) collection
-        // debt otherwise bleeds into this pass's minima (r16 verdict
-        // item 6).
-        System.gc(); Thread.sleep(1500)
-        val ext = externalLoad()
-        pre += ext
-        // ext < 0 (unreadable /proc) must NOT count as quiet — a failed
-        // measurement is not evidence of a quiet host (r17 advice on the
-        // sf10 twin of this guard). The canary still runs, so such a
-        // pass remains normalizable even without the load sample.
-        if (ext < 0)
-          System.err.println(
-            s"[bench] warm pass $pass ($dir): external load unmeasurable" +
-              " — pass counted as not-quiet")
-        else if (ext > loadBar)
-          System.err.println(
-            f"[bench] warm pass $pass ($dir): $ext%.1f external cores > " +
-              f"bar $loadBar%.1f — kept for the min, replacement queued")
-        else quiet += 1
-        buf += new scala.util.Random(1000003L * pass)
-          .shuffle(qnames).flatMap(n => timeIn(dir)(n).map(n -> _)).toMap
-        passLoads += loadNow()
-      }
-      while (buf.size < WarmPasses + MaxExtraPasses && quiet < WarmPasses)
-        runPass()
-      // Stability top-up (r16 verdict item 6): if the BEST single pass
-      // still sums >8% above the per-query min total, the minima have
-      // not converged (self-load, not code) — sample up to 2 more
-      // passes while the budget covers them, instead of shipping a
-      // headline the quiet-host basis will contradict.
-      def minTotal(): Double = qnames.flatMap { n =>
-        val ss = buf.flatMap(_.get(n))
-        if (ss.isEmpty) None else Some(ss.min)
-      }.sum
+    val canary = new CanaryLog(() => Canary.run(spark), 2, "bench")
+    val protocol = new Protocol(canary, bar, "bench")
+    // Stability top-up: if the BEST single pass still sums >8% above the
+    // per-query min total, the minima have not converged; sample up to 2
+    // more passes while the budget covers them.
+    def warmPasses(qnames: Seq[String],
+        time: String => Option[Double]): protocol.Warm = {
+      val w = protocol.warm(qnames, time, WarmPasses, MaxPasses)
       var topUps = 0
-      while (topUps < 2 && buf.nonEmpty && minTotal() > 0 &&
-          buf.map(_.values.sum).min / minTotal() > 1.08 &&
-          remainingS() > buf.map(_.values.sum).min * 1.5) {
-        runPass()
+      while (topUps < 2 && w.minTotal > 0 &&
+          w.passTotals.min / w.minTotal > 1.08 &&
+          budget.remainingS() > w.passTotals.min * 1.5) {
+        w.pass()
         topUps += 1
       }
-      // Trailing bracket (r19 advice): moving the per-pass canary BEFORE
-      // each pass left the FINAL warm pass unbracketed — drift arriving
-      // during it was no longer caught by any canary sample. One closing
-      // sample pair after the last pass restores the bracket.
-      runCanary()
-      (buf.toSeq, pre.toSeq, buf.size - quiet)
+      w.close()
+      w
     }
-    val (warmSamples, preExtLoads, loudPasses) =
-      warmPassesWithDefense(sfDir, coldOk)
-    val warm: Map[String, Double] = coldOk.flatMap { n =>
-      val ss = warmSamples.flatMap(_.get(n))
-      if (ss.isEmpty) None else Some(n -> ss.min)
-    }.toMap
-    val errs = names.filterNot(warm.contains)
+    val time = timer(spark, sfDir, "bench", cleanup = false)
+    val cold = protocol.cold(names, time)
+    val m = warmPasses(names.filter(cold.contains), time).measured(names, cold)
 
-    // The consumer of this line captures only the LAST ~2000 chars of the
-    // run's output, so the line must stay short. With 90+ registered
-    // queries the full per-query map alone exceeds that budget, so the
-    // line carries only (a) every failed query ("err" — normally none) and
-    // (b) the TOP-10 slowest warm times — exactly the entries a regression
-    // hunt reads first, tagged with queries_kind so the truncation is
-    // explicit. The full unrounded min/per-pass/cold detail goes to
-    // BENCH_DETAIL.json beside the build.
-    def f2(d: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, d)
-    val top10 = warm.toSeq.sortBy(-_._2).take(10)
-    val qs = (errs.map(k => s""""$k":"err"""") ++
-      top10.map { case (k, sec) => s""""$k":${f2(sec)}""" })
-      .mkString("{", ",", "}")
-    def jmap(m: Map[String, Double]): String =
-      m.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val total = warm.values.sum
-    val coldTotal = cold.values.sum
-    val passTotals = warmSamples
-      .map(s => f2(s.values.sum)).mkString("[", ",", "]")
-    // Per-query spread (max − min over the warm passes): the one number a
-    // regression hunt needs next to the min — a carried query whose min
-    // moved WITHIN last round's spread was contention, not code.
-    val spread: Map[String, Double] = coldOk.flatMap { n =>
-      val ss = warmSamples.flatMap(_.get(n))
-      if (ss.isEmpty) None else Some(n -> (ss.max - ss.min))
-    }.toMap
-    val loadsJson = passLoads
-      .map(l => s""""$l"""").mkString("[", ",", "]")
-
-    // sf1.0 FULL per-query section (r14 verdict item 1): the whole
-    // registry timed at 10× bench scale with the SAME protocol as the
-    // sf0.1 suite — cold pass, then load-defended shuffled warm passes,
-    // min per query — so a superlinear stage that hides at sf0.1 shows
-    // up as a per-query ratio, not a buried total. The fixture is the
-    // deterministic ScaleUp amplification of the invoked sfDir
-    // (BASELINE.md §sf1.0), regenerated in-process when absent.
-    // GRAFT_SF1_FULL=1 times the WHOLE registry at sf1.0 (the r15 basis
-    // run — ~55 min on its own); it is OFF by default since r16 because
-    // the r15 driver bench died at its timeout with it on. The committed
-    // BENCH_SF1_BASIS.json carries the full-registry sf1.0 basis instead.
-    // The default section is the r13-era 12-query cross-family subset,
-    // and even that only runs if the wall-clock budget still covers its
-    // estimated cost. GRAFT_SF1_HEADLINE=0 disables the section entirely.
-    val Sf1Dir = "target/testdata/sf1.0"
+    // sf1.0 section: queries timed at 10× bench scale on the deterministic
+    // ScaleUp amplification of sfDir (BASELINE.md §sf1.0), regenerated
+    // in-process when absent, so a superlinear stage that hides at sf0.1
+    // shows up as a per-query ratio. By default the 12-query cross-family
+    // subset (cold + min-of-2); GRAFT_SF1_FULL=1 times the whole registry
+    // with the full protocol (~55 min); GRAFT_SF1_HEADLINE=0 disables it.
     val sf1Names = Seq(
       "agg_sensor_stats", "join_revenue_nation", "window_moving_stats",
       "sessionize", "cdc_apply", "dedup_minhash_lsh", "dedup_clusters",
       "decontaminate_bloom", "sim_ivf_topk", "corpus_curate",
       "olap_cube_events", "text_quality_report").filter(fns.contains)
     val sf1Full = sys.env.getOrElse("GRAFT_SF1_FULL", "0") != "0"
-    // Estimated section costs, from the committed r15 bases: the 12-query
-    // subset ≈ fixture regen (~120 s) + cold + 2 warm ≈ 400 s; the full
-    // registry ≈ 3200 s (BENCH_SF1_BASIS); StreamBench ≈ 300 s.
+    // Estimated costs from the committed bases: the subset ≈ fixture
+    // regen + cold + 2 warm ≈ 400 s; the full registry ≈ 3200 s.
     val sf1CostS = if (sf1Full) 3200.0 else 400.0
-    val sf1Budgeted = remainingS() > sf1CostS
+    val sf1Budgeted = budget.remainingS() > sf1CostS
     if (!sf1Budgeted)
-      System.err.println(f"[bench] sf1.0 section skipped: ${remainingS()}%.0f s " +
-        f"left of $budgetS%.0f s budget < $sf1CostS%.0f s estimate")
+      System.err.println(f"[bench] sf1.0 section skipped: " +
+        f"${budget.remainingS()}%.0f s left of ${budget.budgetS}%.0f s " +
+        f"budget < $sf1CostS%.0f s estimate")
     val sf1: Map[String, Double] =
       if (sys.env.getOrElse("GRAFT_SF1_HEADLINE", "1") == "0" || !sf1Budgeted)
         Map.empty
       else try {
-        // Amplify from the dir this bench was invoked with — a hardcoded
-        // base would silently regenerate from the wrong (or missing)
-        // layout and mis-scale the headline.
-        if (!java.nio.file.Files.exists(
-            java.nio.file.Paths.get(s"$Sf1Dir/lineitem.parquet")))
+        if (!Files.exists(Paths.get(s"$Sf1Dir/lineitem.parquet")))
           graft.tools.ScaleUp.run(spark, sfDir, Sf1Dir)
+        val time1 = timer(spark, Sf1Dir, "bench", cleanup = false)
         if (sf1Full) {
-          val cold1 = coldOk.filter(n => timeIn(Sf1Dir)(n).isDefined)
-          val (ws, _, _) = warmPassesWithDefense(Sf1Dir, cold1)
-          cold1.flatMap { n =>
-            val ss = ws.flatMap(_.get(n))
-            if (ss.isEmpty) None else Some(n -> ss.min)
-          }.toMap
+          val cold1 = names.filter(m.cold.contains).filter(time1(_).isDefined)
+          warmPasses(cold1, time1).measured(cold1, Map.empty).warm
         } else {
-          sf1Names.foreach(timeIn(Sf1Dir)) // cold: codegen + page-cache
+          sf1Names.foreach(time1) // cold: codegen + page-cache
           val ws = (1 to 2).map(_ =>
-            sf1Names.flatMap(n => timeIn(Sf1Dir)(n).map(n -> _)).toMap)
-          sf1Names.flatMap { n =>
-            val ss = ws.flatMap(_.get(n))
-            if (ss.isEmpty) None else Some(n -> ss.min)
-          }.toMap
+            sf1Names.flatMap(n => time1(n).map(n -> _)).toMap)
+          Measured(sf1Names, Map.empty, ws, Nil, 0, Nil).warm
         }
       } catch { case e: Throwable =>
         System.err.println(s"[bench] sf1.0 section skipped: ${e.getMessage}")
         Map.empty
       }
-    // sf1_total stays the 12-query cross-family subset for round-over-
-    // round comparability; sf1_full_total is the whole-registry number.
-    val sf1Total = sf1Names.flatMap(sf1.get).sum
-    val sf1FullTotal = sf1.values.sum
 
-    // Streaming-throughput section (r14 verdict item 7): rows/sec +
-    // state rows per stateful family under BOTH state-store providers,
-    // so a provider or state-handling regression becomes a visible
-    // number instead of an invisible e2e-still-green slowdown. OFF by
-    // default since r16 (driver-timeout contributor — r15 finding 1);
-    // its committed numbers live in STREAMBENCH.json. Enable with
-    // GRAFT_STREAM_BENCH=1, still subject to the wall-clock budget.
-    val streamBudgeted = remainingS() > 300.0
-    val streaming: Seq[graft.harness.StreamBench.Result] =
-      if (sys.env.getOrElse("GRAFT_STREAM_BENCH", "0") == "0") Seq.empty
-      else if (!streamBudgeted) {
-        System.err.println(f"[bench] streaming section skipped: " +
-          f"${remainingS()}%.0f s left of $budgetS%.0f s budget")
-        Seq.empty
-      }
-      else try graft.harness.StreamBench.run(spark)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] streaming section skipped: ${e.getMessage}")
-        Seq.empty
-      }
-    val streamingJson = streaming.map { r =>
-      s""""${r.op}_${r.provider}":{"rows_per_sec":${r.rowsPerSec.toLong},""" +
-        s""""rows":${r.rows},"secs":${"%.2f".formatLocal(
-          java.util.Locale.ROOT, r.secs)},"state_rows":${r.stateRows},""" +
-        s""""rows_tracked":${r.rowsTracked},""" +
-        s""""state_bytes":${r.stateBytes},"output_rows":${r.outputRows}}"""
-    }.mkString("{", ",", "}")
-    val streamingRps = streaming.map(r =>
-      s""""${r.op}_${r.provider}":${r.rowsPerSec.toLong}""")
-      .mkString("{", ",", "}")
-    // Output-normalized metric for the output-bound queries (r15 verdict
-    // item 4): the two pHash queries answer a pair graph whose size is
-    // quadratic in the fixture's duplicate-group size (97k pairs at sf0.1
-    // → 9.9M at sf1.0 — 102× output for 10× input), so their WALL ratio
-    // across decades is fixture geometry, not engine work. Stamp output
-    // rows and rows/s beside the wall so the per-query scaling table
-    // self-documents the exception. One count per query, after timing
-    // (counts never pollute the warm minima).
-    val outputRowQueries = sys.env.get("GRAFT_BENCH_OUTPUT_ROWS")
+    // Output rows for the output-bound queries: the two pHash queries
+    // answer a pair graph quadratic in the fixture's duplicate-group size,
+    // so their wall ratio across decades is fixture geometry. One count per
+    // query, after timing, so counts never pollute the warm minima.
+    val outputRows: Map[String, Long] = sys.env.get("GRAFT_BENCH_OUTPUT_ROWS")
       .map(_.split(",").toSeq)
       .getOrElse(Seq("mm_phash_pairs", "mm_phash_clusters"))
-      .filter(warm.contains)
-    val outputRows: Map[String, Long] = outputRowQueries.flatMap { n =>
-      try Some(n -> fns(n)(spark, sfDir).count())
-      catch { case _: Throwable => None }
-    }.toMap
-    val outputRps: Map[String, Double] = outputRows.flatMap { case (n, r) =>
-      warm.get(n).filter(_ > 0).map(w => n -> r / w)
-    }
-    // Prior-run diffing: read the previous BENCH_DETAIL.json (if any)
-    // BEFORE overwriting it and emit per-query `warm_delta_vs_prev`
-    // (this run's min − previous run's min, negative = faster), so
-    // regression triage reads ONE file instead of joining two rounds.
+      .filter(m.warm.contains)
+      .flatMap { n =>
+        try Some(n -> fns(n)(spark, sfDir).count())
+        catch { case _: Throwable => None }
+      }.toMap
+    // The previous BENCH_DETAIL.json, read BEFORE overwriting it, for the
+    // per-query `warm_delta_vs_prev`.
     val prevWarm: Map[String, Double] =
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("BENCH_DETAIL.json")), "UTF-8")
-        """"warm_queries":\{([^}]*)\}""".r.findFirstMatchIn(txt)
-          .map { m =>
-            """"([^"]+)":([-0-9.eE+]+)""".r.findAllMatchIn(m.group(1))
-              .map(g => g.group(1) -> g.group(2).toDouble).toMap
-          }.getOrElse(Map.empty)
-      } catch { case _: Throwable => Map.empty[String, Double] }
-    val delta: Map[String, Double] = warm.flatMap { case (n, v) =>
-      prevWarm.get(n).map(p => n -> (v - p))
-    }
-    try
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("BENCH_DETAIL.json"),
-        (s"""{"warm_total":$total,"cold_total":$coldTotal,""" +
-          s""""warm_queries":${jmap(warm)},"cold_queries":${jmap(cold)},""" +
-          s""""warm_spread":${jmap(spread)},""" +
-          s""""warm_delta_vs_prev":${jmap(delta)},""" +
-          s""""warm_prev_present":${prevWarm.nonEmpty},""" +
-          s""""sf1_queries":${jmap(sf1)},"sf1_total":$sf1Total,""" +
-          s""""sf1_full":$sf1Full,"sf1_full_total":$sf1FullTotal,""" +
-          s""""sf1_budgeted":$sf1Budgeted,"budget_s":$budgetS,""" +
-          s""""settle_s":${f2(settleS)},""" +
-          s""""canary_s":${canarySamples.map(f2)
-            .mkString("[", ",", "]")},""" +
-          s""""canary_min":${
-            if (canarySamples.isEmpty) "-1" else f2(canarySamples.min)},""" +
-          s""""canary_trusted":$canaryTrusted,""" +
-          s""""canary_errors":$canaryErrors,""" +
-          s""""output_rows":${outputRows.map { case (k, v) =>
-            s""""$k":$v""" }.mkString("{", ",", "}")},""" +
-          s""""output_rows_per_sec":${jmap(outputRps)},""" +
-          s""""streaming":$streamingJson,""" +
-          warmSamples.zipWithIndex.map { case (s, i) =>
-            s""""warm_pass_${i + 1}":${jmap(s)}"""
-          }.mkString(",") +
-          s""","pass_loads":$loadsJson,"pass_loads_kind":"loadavg1_after_[pre,cold,warm1..${warmSamples.size}]",""" +
-          s""""pre_ext_loads":${preExtLoads.map(l => if (l < 0) "-1" else f2(l)).mkString("[", ",", "]")},""" +
-          s""""load_bar":${f2(loadBar)},"loud_passes":$loudPasses,""" +
-          s""""errors":${errs.size},"sf":"$sfDir"}""").getBytes("UTF-8"))
+      try readQueryMap(readJson("BENCH_DETAIL.json"), "warm_queries")
+      catch { case _: Throwable => Map.empty }
+
+    val r = Report(m, canary.fields, sf1, sf1Names.flatMap(sf1.get).sum,
+      sf1Full, sf1Budgeted, settleS, outputRows, prevWarm, bar,
+      budget.budgetS, sfDir)
+    try Files.write(Paths.get("BENCH_DETAIL.json"), detail(r).getBytes("UTF-8"))
     catch { case e: Throwable =>
       System.err.println(s"[bench] detail write skipped: ${e.getMessage}")
     }
-    // The sf prints as its bare numeric suffix ("0.1") when the dir is
-    // sf-suffixed — a few more bytes saved off the line.
-    val sfShort = "sf([0-9.]+)/?$".r.findFirstMatchIn(sfDir)
-      .map(_.group(1)).getOrElse(sfDir)
-    // 1-minute load average at the END of the run: a judge comparing
-    // rounds can discount load inflation without a re-run (min-of-3
-    // already absorbs most of it).
-    val loadHint =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString
-        .split("\\s+").head
-      catch { case _: Throwable => "na" }
-    // Contention self-diagnosis: the r11 artifact read as a 2.29× gate
-    // breach until a manual quiet-host re-run. The tell was in the pass
-    // totals all along — on a quiet host the BEST warm pass sums to
-    // ~1.6-1.7× the min-of-3 total (per-query jitter alone), while the
-    // contended driver run sat at 2.5×. Emit the ratio always and flag
-    // `contended` past 2.0 so the artifact says "discount me, re-run
-    // quiet" by itself (protocol: BASELINE.md §bench-contention).
-    val bestPass = warmSamples.map(_.values.sum).min
-    val passRatio = if (total > 0) bestPass / total else 1.0
-    val contended = passRatio > 2.0
-    // pass_loads rides the headline line too (not just the detail file):
-    // loadavg sampled after [pre, cold, warm1..3] makes the artifact
-    // self-calibrating — a judge reads which pass the host was busy in
-    // directly, instead of trusting the two-point `contended` threshold.
-    val extLoadsJson = preExtLoads
-      .map(l => if (l < 0) "\"na\"" else s""""${f2(l)}"""")
-      .mkString("[", ",", "]")
-    println(s"""{"metric":"total","value":${f2(total)},"unit":"sec","queries":$qs,"queries_kind":"slowest10_min_of_${warmSamples.size}","warm_pass_totals":$passTotals,"pass_loads":$loadsJson,"pre_ext_loads":$extLoadsJson,"load_bar":${f2(loadBar)},"loud_passes":$loudPasses,"pass_min_ratio":${f2(passRatio)},"contended":$contended,"canary_s":${canarySamples.map(f2).mkString("[", ",", "]")},"canary_min":${if (canarySamples.isEmpty) "-1" else f2(canarySamples.min)},"canary_trusted":$canaryTrusted,"canary_errors":$canaryErrors,"n":${names.size},"cold_total":${f2(coldTotal)},"errors":${errs.size},"sf1_total":${f2(sf1Total)},"sf1_full":$sf1Full,"sf1_full_total":${f2(sf1FullTotal)},"sf1_budgeted":$sf1Budgeted,"sf1_n":${sf1.size},"settle_s":${f2(settleS)},"streaming_rps":$streamingRps,"wall_s":${f2(elapsedS())},"budget_s":${f2(budgetS)},"load_hint":"$loadHint","detail":"BENCH_DETAIL.json","sf":"$sfShort"}""")
+    println(headline(r, budget.elapsedS(), loadNow()))
     spark.stop()
+  }
+
+  /** BENCH_DETAIL.json: the full unrounded min/per-pass/cold detail. */
+  def detail(r: Report): String = {
+    val m = r.m
+    val outputRps = r.outputRows.flatMap { case (n, rows) =>
+      m.warm.get(n).filter(_ > 0).map(w => n -> rows / w)
+    }
+    val delta = m.warm.flatMap { case (n, v) =>
+      r.prevWarm.get(n).map(p => n -> (v - p))
+    }
+    obj(Seq("warm_total" -> m.warm.values.sum, "cold_total" -> m.cold.values.sum,
+      "warm_queries" -> jmap(m.warm), "cold_queries" -> jmap(m.cold),
+      "warm_spread" -> jmap(m.spread), "warm_delta_vs_prev" -> jmap(delta),
+      "warm_prev_present" -> r.prevWarm.nonEmpty, "sf1_queries" -> jmap(r.sf1),
+      "sf1_total" -> r.sf1Total, "sf1_full" -> r.sf1Full,
+      "sf1_full_total" -> r.sf1.values.sum, "sf1_budgeted" -> r.sf1Budgeted,
+      "budget_s" -> r.budgetS, "settle_s" -> f2(r.settleS)) ++ r.canary ++
+      Seq("output_rows" -> jmap(r.outputRows),
+        "output_rows_per_sec" -> jmap(outputRps), "streaming" -> "{}") ++
+      m.passes.zipWithIndex.map { case (s, i) => s"warm_pass_${i + 1}" -> jmap(s) } ++
+      Seq("pass_loads" -> m.passLoadsJson, "pass_loads_kind" ->
+        quote(s"loadavg1_after_[pre,cold,warm1..${m.passes.size}]"),
+        "pre_ext_loads" -> jarr(m.preExt.map(l => if (l < 0) "-1" else f2(l))),
+        "load_bar" -> f2(r.loadBar), "loud_passes" -> m.loud,
+        "errors" -> m.errors.size, "sf" -> quote(r.sfDir)))
+  }
+
+  /** The headline line. Its consumer keeps only the LAST ~2000 chars of
+    * the run's output, so the per-query map carries only every failed
+    * query ("err") and the TOP-10 slowest warm times; BENCH_DETAIL.json
+    * has the rest. */
+  def headline(r: Report, wallS: Double, loadHint: String): String = {
+    val m = r.m
+    val total = m.warm.values.sum
+    val qs = obj(m.errors.map(_ -> quote("err")) ++
+      m.warm.toSeq.sortBy(-_._2).take(10).map { case (k, s) => k -> f2(s) })
+    // Contention self-diagnosis: on a quiet host the BEST warm pass sums
+    // to ~1.6-1.7× the per-query min total (per-query jitter alone); past
+    // 2.0 the artifact flags itself `contended` (BASELINE §bench-contention).
+    val passRatio = if (total > 0) m.passTotals.min / total else 1.0
+    // The sf as its bare numeric suffix ("0.1") when the dir is sf-suffixed.
+    val sfShort = "sf([0-9.]+)/?$".r.findFirstMatchIn(r.sfDir)
+      .map(_.group(1)).getOrElse(r.sfDir)
+    obj(Seq("metric" -> quote("total"), "value" -> f2(total),
+      "unit" -> quote("sec"), "queries" -> qs,
+      "queries_kind" -> quote(s"slowest10_min_of_${m.passes.size}"),
+      "warm_pass_totals" -> m.passTotalsJson, "pass_loads" -> m.passLoadsJson,
+      "pre_ext_loads" ->
+        jarr(m.preExt.map(l => if (l < 0) quote("na") else quote(f2(l)))),
+      "load_bar" -> f2(r.loadBar), "loud_passes" -> m.loud,
+      "pass_min_ratio" -> f2(passRatio), "contended" -> (passRatio > 2.0)) ++
+      r.canary ++
+      Seq("n" -> m.names.size, "cold_total" -> f2(m.cold.values.sum),
+        "errors" -> m.errors.size, "sf1_total" -> f2(r.sf1Total),
+        "sf1_full" -> r.sf1Full, "sf1_full_total" -> f2(r.sf1.values.sum),
+        "sf1_budgeted" -> r.sf1Budgeted, "sf1_n" -> r.sf1.size,
+        "settle_s" -> f2(r.settleS), "streaming_rps" -> "{}",
+        "wall_s" -> f2(wallS), "budget_s" -> f2(r.budgetS),
+        "load_hint" -> quote(loadHint), "detail" -> quote("BENCH_DETAIL.json"),
+        "sf" -> quote(sfShort)))
   }
 }

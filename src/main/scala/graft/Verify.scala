@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.harness.BenchCore
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -13,29 +14,8 @@ object Verify {
     val jsonOnly = args.length > 2 && args(2) == "--json-only"
     val nameFilter = if (jsonOnly) "" else if (args.length > 2) args(2) else ".*"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle parallelism decouples from the thread count when asked:
-    // at the sf10 probe scale, 32 partitions put ~1M wide rows in one
-    // task's sort and the per-task heap becomes the limit — more
-    // partitions is the honest knob (a real cluster would run hundreds).
-    // Auto-raise when unset (r16 verdict item 3): the fixture's biggest
-    // table tells the scale — lineitem over ~512 MB means the sf10-class
-    // decade, where `cpus` partitions put ~1M wide rows in one task and
-    // default heaps OOM. 128 matches the documented sf10 protocol.
-    val autoParts: String =
-      try {
-        val li = Paths.get(s"$sfDir/lineitem.parquet")
-        if (Files.exists(li) && Files.size(li) > 512L * 1024 * 1024) "128"
-        else cpus
-      } catch { case _: Throwable => cpus }
-    val shuffleParts =
-      sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", autoParts)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchCore.session(cpus,
+      BenchCore.shufflePartitions(sfDir, cpus), logLevel = "WARN")
     new java.io.File(outDir).mkdirs()
     // GRAFT_VERIFY_COALESCE=0 keeps the write's natural parallelism: at
     // the sf100 digest-adjudication scale a coalesce(1) drags the whole

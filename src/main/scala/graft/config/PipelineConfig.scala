@@ -47,8 +47,7 @@ final case class PipelineConfig(
     jdbc: JdbcConfig,
     smtp: SmtpConfig,
     checkpointRoot: String,
-    watermarkDelay: String,
-    windowDuration: String)
+    watermarkDelay: String)
 
 object PipelineConfig {
 
@@ -82,7 +81,6 @@ object PipelineConfig {
         notifier = get("ALERT_NOTIFIER", "log"),
         startTls = get("SMTP_STARTTLS", "true").toBoolean),
       checkpointRoot = get("CHECKPOINT_ROOT", "/tmp/checkpoints/graft"),
-      watermarkDelay = get("WATERMARK_DELAY", "1 minute"),
-      windowDuration = get("WINDOW_DURATION", "4 minutes"))
+      watermarkDelay = get("WATERMARK_DELAY", "1 minute"))
   }
 }

@@ -9,9 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * too:
   *
   * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-  *   ...
+  * // session config: spark.sql.extensions=graft.functions.GraftExtensions
   * spark.sql("SELECT dot_product(a, b) FROM vectors")
   * }}}
   *

@@ -45,11 +45,9 @@ object Canary {
     * ≥3 post-warmup samples within 15% of their min, where post-warmup
     * is every sample but the first (the first pays the probe's own
     * codegen and always reads high). Every runner that stamps
-    * `canary_trusted` (Bench, BenchSf10, BenchSf100, StreamBenchMain,
-    * CanaryProbe) calls this instead of hand-copying the arithmetic —
-    * r19 shipped five inline copies, and a future tweak to the rule
-    * could silently diverge across artifacts readers are told to trust
-    * as a single rule (r19 advice).
+    * `canary_trusted` (the bench mains through `BenchCore.CanaryLog`,
+    * `Probe canary`/`bridge`, perfbench) calls this, so the rule cannot
+    * diverge across artifacts readers are told to trust as one rule.
     */
   def trusted(samples: Seq[Double]): Boolean = {
     val post = samples.drop(1)

@@ -1,69 +1,44 @@
 package graft.harness
 
-import org.apache.spark.sql.SparkSession
+import graft.harness.BenchCore._
 
-/** Standalone runner for [[StreamBench]] (r15 verdict item 2): the
-  * throughput numbers existed but never landed in a committed artifact —
-  * the driver bench can't afford the section's wall time (r15 timeout),
-  * so this main runs the sweep on a quiet host and writes
-  * `STREAMBENCH.json` beside the build for the judge to diff round over
-  * round. Usage: `runMain graft.harness.StreamBenchMain [out.json]`.
-  * The pre-run external-load sample is stamped so a loud-host artifact
+/** Standalone runner for [[StreamBench]]: runs the sweep on a quiet host
+  * and writes `STREAMBENCH.json` beside the build for round-over-round
+  * diffs. Usage: `runMain graft.harness.StreamBenchMain [out.json]`.
+  * The load before and after the sweep is stamped so a loud-host artifact
   * discounts itself the same way the batch bench does.
   */
 object StreamBenchMain {
+
+  /** Everything the artifact is rendered from. */
+  final case class Report(
+      cpus: Int,
+      loadPre: String,
+      loadPost: String,
+      canary: Seq[(String, Any)],
+      canaryBasis: Double,
+      normFactor: Double,
+      results: Seq[StreamBench.Result])
+
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "STREAMBENCH.json"
     // Parsed to Int up front: a non-numeric value must fail HERE, not
-    // produce an unparseable JSON artifact (r16 advice).
+    // produce an unparseable JSON artifact.
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").trim.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def loadNow(): String =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString
-        .split("\\s+").head
-      catch { case _: Throwable => "na" }
+    val spark = session(cpus.toString, cpus.toString)
     val preLoad = loadNow()
     // Drift canary, stamped like the batch benches (BASELINE §Drift
-    // canary): round 18 measured this box running the whole streaming
-    // sweep 2–3× slower than the r17 commit at zero external load —
-    // without a canary the artifact can't say "box, not code" for
-    // round-over-round rows/s diffs. FOUR samples since r19 (the first
-    // pays the probe's own codegen, leaving ≥3 post-warmup samples —
-    // the documented trust rule's minimum); failed samples are DROPPED
-    // and counted in canary_errors, never stamped as -1 sentinels
-    // inside canary_s (r18 advice: the sentinel encoding diverged from
-    // Bench/BenchSf10 and poisoned a naive min). The min is the
-    // estimator.
-    var canaryErrors = 0
-    val canary = (1 to 4).flatMap { _ =>
-      try Some(Canary.run(spark))
-      catch { case _: Throwable => canaryErrors += 1; None }
-    }
-    // Trust rule shared via Canary.trusted (r19 advice: five inline
-    // copies could silently diverge).
-    val canaryTrusted = Canary.trusted(canary)
-    // Session-regime normalization (r18 verdict finding 3: the committed
-    // sweep's absolute rows/s undersold ~2× purely by box regime). The
-    // canary basis is CONFIG-SPECIFIC (this runner's local[cpus] /
-    // shuffle=cpus session); it is injected via GRAFT_CANARY_BASIS_S —
-    // the committed quiet-host value lives in BASELINE §Drift canary.
-    // When present and the canary is trusted, every family row carries
-    // rows_per_sec_norm = rows_per_sec × canary_min / basis (a slower
-    // box ⇒ canary_min above basis ⇒ true quiet-host rate is HIGHER),
-    // so the artifact reads absolutely without a BASELINE cross-ref.
-    // Guarded parse (r19 advice): a malformed value must not crash the
-    // sweep before any measurement, and a non-positive value must not
-    // silently price rows_per_sec_norm off a wrong basis — both fall
-    // back to unnormalized output with a visible warning. The artifact
-    // stamps the basis' provenance/config so a reader can check the
-    // injected value against the committed one for THIS runner's
-    // session shape.
+    // canary). FOUR samples: the first pays the probe's own codegen,
+    // leaving the ≥3 post-warmup samples the trust rule needs.
+    val canary = new CanaryLog(() => Canary.run(spark), 4, "streambench")
+    canary.site()
+    // Session-regime normalization: the canary basis is CONFIG-SPECIFIC
+    // (this runner's local[cpus] / shuffle=cpus session) and injected via
+    // GRAFT_CANARY_BASIS_S; the committed quiet-host value lives in
+    // BASELINE §Drift canary. When present and the canary is trusted,
+    // every family row carries rows_per_sec_norm = rows_per_sec ×
+    // canary_min / basis. A malformed or non-positive value falls back to
+    // unnormalized output with a visible warning.
     val canaryBasisRaw = sys.env.get("GRAFT_CANARY_BASIS_S")
     val canaryBasis = canaryBasisRaw
       .flatMap(s => scala.util.Try(s.trim.toDouble).toOption)
@@ -73,52 +48,49 @@ object StreamBenchMain {
         s"'${canaryBasisRaw.get}' is not a positive number — " +
         "rows_per_sec_norm omitted (unnormalized output)")
     val normFactor =
-      if (canaryBasis > 0 && canaryTrusted && canary.nonEmpty)
-        canary.min / canaryBasis
+      if (canaryBasis > 0 && canary.trusted && canary.samples.nonEmpty)
+        canary.samples.min / canaryBasis
       else -1.0
     // GRAFT_STREAM_DECADE=1 appends the 10×-scale flood-screen rows
-    // (600k arrivals vs 10k refs — r17 verdict item 3) after the
-    // standard sweep; 0 keeps the artifact cost at the carried level.
+    // (600k arrivals vs 10k refs) after the standard sweep.
     val decade = sys.env.getOrElse("GRAFT_STREAM_DECADE", "0") != "0"
-    // Collect the canary's garbage before the timed sweep starts (the
-    // same post-probe breather the batch benches take since r19).
-    System.gc(); Thread.sleep(1500)
+    breather()
     val results = StreamBench.run(spark) ++
       (if (decade) StreamBench.runDecade(spark) else Seq.empty)
-    def f2(d: Double): String =
-      "%.2f".formatLocal(java.util.Locale.ROOT, d)
-    val rows = results.map { r =>
-      val norm =
-        if (normFactor > 0)
-          s""""rows_per_sec_norm":${(r.rowsPerSec * normFactor).toLong},"""
-        else ""
-      s"""    "${r.op}_${r.provider}":{"rows_per_sec":${r.rowsPerSec.toLong},""" +
-        norm +
-        s""""rows":${r.rows},"secs":${f2(r.secs)},"state_rows":${r.stateRows},""" +
-        s""""rows_tracked":${r.rowsTracked},""" +
-        s""""state_bytes":${r.stateBytes},"output_rows":${r.outputRows}}"""
-    }.mkString("{\n", ",\n", "\n  }")
-    val canaryJson = canary.map(f2).mkString("[", ",", "]")
-    val canaryMin = if (canary.isEmpty) "-1" else f2(canary.min)
-    val json =
-      s"""{
-         |  "kind": "streambench",
-         |  "cpus": $cpus,
-         |  "load_pre": "$preLoad",
-         |  "load_post": "${loadNow()}",
-         |  "canary_s": $canaryJson,
-         |  "canary_min": $canaryMin,
-         |  "canary_trusted": $canaryTrusted,
-         |  "canary_errors": $canaryErrors,
-         |  "canary_basis_s": ${if (canaryBasis > 0) f2(canaryBasis) else "-1"},
-         |  "canary_basis_source": "env GRAFT_CANARY_BASIS_S; must be the committed quiet-host basis for THIS runner's session shape (local[$cpus], shuffle=$cpus) from BASELINE section Drift canary — a basis measured under another config does not price this run",
-         |  "norm_factor": ${if (normFactor > 0) f2(normFactor) else "-1"},
-         |  "norm_note": "rows_per_sec_norm = rows_per_sec x canary_min / canary_basis_s: the canary (graft.harness.Canary, fixed code-independent probe) prices this session's box regime against the committed quiet-host basis, so absolute rates compare across sessions; ratios within one run need no normalization",
-         |  "streaming": $rows
-         |}""".stripMargin
+    val json = render(Report(cpus, preLoad, loadNow(), canary.fields,
+      canaryBasis, normFactor, results))
     java.nio.file.Files.write(
       java.nio.file.Paths.get(out), json.getBytes("UTF-8"))
     println(json)
     spark.stop()
+  }
+
+  def render(r: Report): String = {
+    val rows = r.results.map { s =>
+      val norm =
+        if (r.normFactor > 0)
+          s""""rows_per_sec_norm":${(s.rowsPerSec * r.normFactor).toLong},"""
+        else ""
+      s"""    "${s.op}_${s.provider}":{"rows_per_sec":${s.rowsPerSec.toLong},""" +
+        norm +
+        s""""rows":${s.rows},"secs":${f2(s.secs)},"state_rows":${s.stateRows},""" +
+        s""""rows_tracked":${s.rowsTracked},""" +
+        s""""state_bytes":${s.stateBytes},"output_rows":${s.outputRows}}"""
+    }.mkString("{\n", ",\n", "\n  }")
+    obj(Seq("kind" -> quote("streambench"), "cpus" -> r.cpus,
+      "load_pre" -> quote(r.loadPre), "load_post" -> quote(r.loadPost)) ++
+      r.canary ++ Seq(
+      "canary_basis_s" -> (if (r.canaryBasis > 0) f2(r.canaryBasis) else "-1"),
+      "canary_basis_source" -> quote("env GRAFT_CANARY_BASIS_S; must be the " +
+        "committed quiet-host basis for THIS runner's session shape " +
+        s"(local[${r.cpus}], shuffle=${r.cpus}) from BASELINE section Drift " +
+        "canary — a basis measured under another config does not price this run"),
+      "norm_factor" -> (if (r.normFactor > 0) f2(r.normFactor) else "-1"),
+      "norm_note" -> quote("rows_per_sec_norm = rows_per_sec x canary_min / " +
+        "canary_basis_s: the canary (graft.harness.Canary, fixed " +
+        "code-independent probe) prices this session's box regime against " +
+        "the committed quiet-host basis, so absolute rates compare across " +
+        "sessions; ratios within one run need no normalization"),
+      "streaming" -> rows), pretty = true)
   }
 }

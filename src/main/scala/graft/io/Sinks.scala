@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode}
 
 import graft.config.{JdbcConfig, PipelineConfig}
@@ -281,9 +281,4 @@ object Sinks {
   def console(stream: DataFrame, numRows: Int = 20): DataStreamWriter[Row] =
     stream.writeStream.format("console")
       .option("numRows", numRows).outputMode("append")
-
-  /** Micro-batch trigger shared by the pipeline queries; the reference uses
-    * the default as-fast-as-possible trigger, kept here as the default.
-    */
-  def defaultTrigger: Trigger = Trigger.ProcessingTime(0L)
 }

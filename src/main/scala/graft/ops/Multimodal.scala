@@ -48,12 +48,6 @@ object Multimodal {
     StructField("sample_rate", IntegerType),
     StructField("duration_ms", LongType)))
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType),
-    StructField("payload", BinaryType),
-    StructField("meta", mediaMetaSchema)))
-
   /** Build a media frame from the documents fixture: UTF-8 bytes as the
     * opaque payload (the container ships no real image/audio fixtures; the
     * plumbing does not care what the bytes mean). NULL text follows the

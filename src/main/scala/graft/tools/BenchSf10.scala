@@ -2,19 +2,20 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.harness.Canary
+import graft.harness.BenchCore._
 
-/** Second-decade (sf10) bench card — r16 verdict item 2.
+/** Second-decade (sf10) bench card.
   *
   * Runs the Bench protocol (cold pass + min-of-3 seed-shuffled warm
-  * passes with external-load defense) over the 25 queries that are
-  * oracle-adjudicated at sf10 (BASELINE.md §"sf10 adjudication posture"),
-  * against the decade-scaled fixture, and commits two artifacts:
+  * passes with external-load defense, per-query cleanup) over the 25
+  * queries that are oracle-adjudicated at sf10 (BASELINE.md §"sf10
+  * adjudication posture"), against the decade-scaled fixture, and commits
+  * two artifacts:
   *
   *   - `BENCH_SF10_BASIS.json` — one JSON line, same shape discipline as
   *     the graded headline: totals, per-pass loads, and the FULL 25-query
-  *     warm map (25 entries fit the line budget that forced the sf0.1
-  *     headline down to top-10).
+  *     warm map.
   *   - `BENCH_SF10_DETAIL.json` — per-query cold / warm-min / spread,
   *     the committed sf1.0 basis time (read from `BENCH_SF1_DETAIL.json`
   *     `sf1_queries`), the sf1→sf10 wall ratio, and output rows where
@@ -24,23 +25,18 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: `SPARK_DRIVER_MEM=48g sbt "runMain graft.tools.BenchSf10"`.
   * 48g is basis-run headroom, not a floor — BASELINE.md §sf10 records the
-  * worst query (`corpus_curate`) clean at 16g since round 17. Shuffle
-  * partitions auto-raise to 128 at the decade fixture exactly as
-  * Bench/Verify do (lineitem > 512 MB ⇒ 128).
+  * worst query (`corpus_curate`) clean at 16g. Shuffle partitions
+  * auto-raise to 128 at the decade fixture exactly as Bench/Verify do.
   *
-  * Protocol (BASELINE §sf10-bench-protocol): cold + warm passes until
-  * EITHER two quiet warm passes exist or the budget stops covering
-  * another — **min-of-2 is the declared sf10 protocol** (r17 verdict
-  * item 5: the 9000 s default budget covers cold + 2 warm at the
-  * committed card's pace; a third pass is a bonus, not a requirement).
-  * The default budget is sized so a bare `runMain` reproduces the
-  * committed card's shape (r17 advice: the card was run with
-  * `GRAFT_BENCH_BUDGET_S=9000` while the default was 5400, so a default
-  * invocation could not reproduce it).
+  * Protocol (BASELINE §sf10-bench-protocol): warm passes run until three
+  * quiet ones exist (at most five) or the budget stops covering another —
+  * **min-of-2 is the declared sf10 protocol**; the 9000 s default budget
+  * covers cold + 2 warm at the committed card's pace, so a bare `runMain`
+  * reproduces the committed card's shape.
   */
 object BenchSf10 {
   private val WarmPasses = 3
-  private val MaxExtraPasses = 2
+  private val MaxPasses = 5
 
   /** The sf10-adjudicated registry subset (BASELINE.md posture table). */
   val Sf10Adjudicated: Seq[String] = Seq(
@@ -54,22 +50,25 @@ object BenchSf10 {
     "sessionize", "funnel_conversion", "decontaminate_setsim")
 
   /** Output-quadratic-per-decade queries: stamp output rows so the big
-    * wall ratio reads as output growth (the same self-documentation the
-    * sf0.1→sf1.0 card gives pHash via BENCH_DETAIL `output_rows`). */
+    * wall ratio reads as output growth. */
   val OutputBound: Set[String] =
     Set("dedup_setsim_exact", "dedup_minhash_lsh")
 
-  def main(args: Array[String]): Unit = {
-    val wallStart = System.nanoTime()
-    def elapsedS(): Double = (System.nanoTime() - wallStart) / 1e9
-    // 9000 s default (r17 advice): the committed card needed
-    // GRAFT_BENCH_BUDGET_S=9000 over the old 5400 default, so a bare
-    // invocation produced min-of-1 with no min-of-N defense. The default
-    // now covers cold + ≥2 quiet warm passes at the committed pace.
-    val budgetS = sys.env.get("GRAFT_BENCH_BUDGET_S").map(_.toDouble)
-      .getOrElse(9000.0)
-    def remainingS(): Double = budgetS - elapsedS()
+  /** Everything the two artifacts are rendered from. */
+  final case class Report(
+      m: Measured,
+      canary: Seq[(String, Any)],
+      sf1: Map[String, Double],
+      outputRows: Map[String, Long],
+      sfDir: String,
+      shuffleParts: String,
+      cpus: String,
+      driverMem: String,
+      wallS: Double,
+      budgetS: Double)
 
+  def main(args: Array[String]): Unit = {
+    val budget = new Budget(9000.0)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF10_DIR",
       "target/testdata/sf10")
     require(Files.exists(Paths.get(s"$sfDir/lineitem.parquet")),
@@ -77,23 +76,9 @@ object BenchSf10 {
         "`runMain graft.tools.ScaleUp target/testdata/sf1.0 " +
         s"$sfDir 10` first (from an sf1.0 fixture)")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    // Decade-scale shuffle sizing, same rule as Bench/Verify (r16 item 3).
-    val shuffleParts = sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS",
-      if (Files.size(Paths.get(s"$sfDir/lineitem.parquet")) >
-        512L * 1024 * 1024) "128" else cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    try {
-      spark.range(1000).selectExpr("sum(id)").collect()
-      spark.read.parquet(s"$sfDir/region.parquet").count()
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench-sf10] warmup skipped: ${e.getMessage}")
-    }
+    val shuffleParts = shufflePartitions(sfDir, cpus)
+    val spark = session(cpus, shuffleParts)
+    warmup(spark, sfDir, "bench-sf10")
 
     val fns = graft.SparkEntry.queries
     val names = Sf10Adjudicated.filter { n =>
@@ -101,258 +86,88 @@ object BenchSf10 {
       if (!ok) System.err.println(s"[bench-sf10] $n not in registry")
       ok
     }
-
-    def loadNow(): String =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString
-        .split("\\s+").head
-      catch { case _: Throwable => "na" }
-    val clkTck: Double =
-      try {
-        val p = new ProcessBuilder("getconf", "CLK_TCK").start()
-        val out = new String(p.getInputStream.readAllBytes, "UTF-8").trim
-        p.waitFor()
-        val v = out.toDouble
-        if (v > 0) v else 100.0
-      } catch { case _: Throwable => 100.0 }
-    def externalLoad(windowMs: Long = 1000L): Double =
-      try {
-        def snap(): (Long, Long) = {
-          val cpu = scala.io.Source.fromFile("/proc/stat").getLines()
-            .next().trim.split("\\s+").drop(1).map(_.toLong)
-          val busy = cpu.take(3).sum +
-            (if (cpu.length > 6) cpu(5) + cpu(6) else 0L)
-          val self = scala.io.Source.fromFile("/proc/self/stat").mkString
-          val rest = self.substring(self.lastIndexOf(')') + 2).split(" ")
-          (busy, rest(11).toLong + rest(12).toLong)
-        }
-        val (b0, s0) = snap(); Thread.sleep(windowMs)
-        val (b1, s1) = snap()
-        math.max(0.0,
-          ((b1 - b0) - (s1 - s0)) * (1000.0 / clkTck) / windowMs)
-      } catch { case _: Throwable => -1.0 }
-
-    // noop sink, same rationale as Bench: count() would let Catalyst
-    // prune the projection work these queries exist to do.
-    def time(name: String): Option[Double] =
-      try {
-        val t0 = System.nanoTime()
-        fns(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        Some((System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench-sf10] $name failed: ${e.getMessage}")
-        None
-      } finally {
-        // Drop the finished query's localCheckpoint blocks (same as
-        // Verify): at sf10 one pair-graph query leaves GBs of storage
-        // blocks behind, and the squeezed execution memory inflated
-        // queries later in the pass up to 9× in the first card run
-        // (asof_purchase_view 63 s in-pass vs 6.9 s isolated).
-        // blocking = true: the finally is untimed, and async removals
-        // would otherwise bleed into the next query's timed window
-        // (measured 19% headline inflation at sf0.1 from exactly that).
-        // Cleanup failure must not replace the recorded per-query error
-        // or abort the multi-hour run (r17 advice: a query that dies by
-        // killing the SparkContext would otherwise throw HERE and take
-        // the whole bench down instead of degrading to one error row).
-        try {
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench-sf10] cleanup after $name failed " +
-            s"(continuing): ${e.getMessage}")
-        }
-      }
-
-    // Drift canary (r17 verdict item 1 — same probe as Bench), with the
-    // r19 trust hardening: TWO samples per site so the stamped list can
-    // satisfy the ≥3-post-warmup-within-15% rule, run BEFORE each pass's
-    // gc/settle and load sample (the canary's garbage and load window
-    // must not be inherited by the timed pass — r18 advice), failed
-    // samples dropped + counted, and `canary_trusted` stamped so the
-    // card says itself whether canary_min may carry a normalization.
-    val canarySamples = scala.collection.mutable.ArrayBuffer[Double]()
-    var canaryErrors = 0
-    def runCanary(): Unit = (1 to 2).foreach { _ =>
-      try canarySamples += graft.harness.Canary.run(spark)
-      catch { case e: Throwable =>
-        canaryErrors += 1
-        System.err.println(s"[bench-sf10] canary failed: ${e.getMessage}")
-      }
-    }
-    // Trust rule shared via graft.harness.Canary.trusted (r19 advice:
-    // five inline copies could silently diverge).
-    def canaryTrusted: Boolean =
-      graft.harness.Canary.trusted(canarySamples.toSeq)
-    runCanary()
-    // Collect the canary's garbage before the timed cold pass (same
-    // breather the warm passes get).
-    System.gc(); Thread.sleep(1500)
-
-    val passLoads = scala.collection.mutable.ArrayBuffer(loadNow())
-    val cold: Map[String, Double] =
-      names.flatMap(n => time(n).map(n -> _)).toMap
-    val coldOk = names.filter(cold.contains)
-    passLoads += loadNow()
-
-    val loadBar = sys.env.get("GRAFT_BENCH_LOAD_BAR").map(_.toDouble)
-      .getOrElse(cpus.toDouble / 4.0)
-    val buf = scala.collection.mutable.ArrayBuffer[Map[String, Double]]()
-    val pre = scala.collection.mutable.ArrayBuffer[Double]()
-    var quiet = 0
-    def runPass(): Unit = {
-      val pass = buf.size + 1
-      // Canary before the gc/settle and the load sample (r18 advice):
-      // the timed pass must start from the post-GC quiet state, not
-      // from the canary's allocation debt.
-      runCanary()
-      System.gc(); Thread.sleep(1500)
-      val ext = externalLoad()
-      pre += ext
-      // ext < 0 = the measurement itself failed (unreadable /proc): NOT
-      // evidence of a quiet host, so it must not satisfy the quiet-pass
-      // quota (r17 advice — the old `ext >= 0 &&` guard silently passed
-      // the load defense on a host where it never ran).
-      if (ext < 0)
-        System.err.println(
-          s"[bench-sf10] warm pass $pass: external load unmeasurable — " +
-            "pass counted as not-quiet")
-      else if (ext > loadBar)
-        System.err.println(
-          f"[bench-sf10] warm pass $pass: $ext%.1f external cores > " +
-            f"bar $loadBar%.1f — kept for the min, replacement queued")
-      else quiet += 1
-      buf += new scala.util.Random(1000003L * pass)
-        .shuffle(coldOk).flatMap(n => time(n).map(n -> _)).toMap
-      passLoads += loadNow()
-    }
-    while (buf.size < WarmPasses + MaxExtraPasses && quiet < WarmPasses &&
-      (buf.isEmpty || remainingS() > buf.map(_.values.sum).min * 1.2))
-      runPass()
-    // Trailing bracket (r19 advice): the per-pass canary runs BEFORE its
-    // pass, so without a closing sample pair drift arriving during the
-    // final warm pass would go uncaught.
-    runCanary()
-
-    val warm: Map[String, Double] = coldOk.flatMap { n =>
-      val ss = buf.flatMap(_.get(n))
-      if (ss.isEmpty) None else Some(n -> ss.min)
-    }.toMap
-    val spread: Map[String, Double] = coldOk.flatMap { n =>
-      val ss = buf.flatMap(_.get(n))
-      if (ss.isEmpty) None else Some(n -> (ss.max - ss.min))
-    }.toMap
-    val errs = names.filterNot(warm.contains)
+    val canary = new CanaryLog(() => Canary.run(spark), 2, "bench-sf10")
+    val m = new Protocol(canary, loadBar(cpus), "bench-sf10").run(names,
+      timer(spark, sfDir, "bench-sf10", cleanup = true), WarmPasses,
+      MaxPasses, afford = best => budget.remainingS() > best * 1.2)
 
     // Output rows for the output-bound pair generators (budget-gated:
     // each is one extra execution of an already-timed plan).
     val outputRows: Map[String, Long] = OutputBound.toSeq.sorted.flatMap {
       n =>
-        if (!warm.contains(n)) None
-        else if (remainingS() < warm(n) * 3) {
+        if (!m.warm.contains(n)) None
+        else if (budget.remainingS() < m.warm(n) * 3) {
           System.err.println(s"[bench-sf10] output-rows($n) skipped: " +
-            f"${remainingS()}%.0f s left")
+            f"${budget.remainingS()}%.0f s left")
           None
         } else try Some(n -> fns(n)(spark, sfDir).count())
         catch { case _: Throwable => None }
     }.toMap
 
     // sf1.0 per-query basis for the decade-ratio column.
-    val sf1: Map[String, Double] = try {
-      val txt = new String(
-        Files.readAllBytes(Paths.get("BENCH_SF1_DETAIL.json")), "UTF-8")
-      val block = txt.split("\"sf1_queries\"\\s*:\\s*\\{", 2)(1)
-        .takeWhile(_ != '}')
-      "\"([^\"]+)\"\\s*:\\s*([0-9.Ee+-]+)".r.findAllMatchIn(block)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench-sf10] sf1 basis unreadable: $e")
-      Map.empty
-    }
+    val sf1: Map[String, Double] =
+      try readQueryMap(readJson("BENCH_SF1_DETAIL.json"), "sf1_queries")
+      catch { case e: Throwable =>
+        System.err.println(s"[bench-sf10] sf1 basis unreadable: $e")
+        Map.empty
+      }
 
-    def f2(d: Double): String =
-      "%.2f".formatLocal(java.util.Locale.ROOT, d)
-    def jmap(m: Map[String, Double], fmt: Double => String): String =
-      m.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""$k":${fmt(v)}""" }
-        .mkString("{", ",", "}")
-
-    val total = warm.values.sum
-    val coldTotal = cold.values.sum
-    val passTotals = buf.map(s => f2(s.values.sum)).mkString("[", ",", "]")
-    val loadsJson = passLoads.map(l => s""""$l"""").mkString("[", ",", "]")
-    val preJson = pre.map(l => f2(l)).mkString("[", ",", "]")
-    val ratios: Map[String, Double] = warm.flatMap { case (n, w) =>
-      sf1.get(n).filter(_ > 0).map(b => n -> w / b)
-    }
-    val errsJson = errs.map(n => s""""$n"""").mkString("[", ",", "]")
-
-    // Derived, not hardcoded (r17 advice): an errored / missing query
-    // must shrink the label, not let "all25" overstate coverage.
-    val queriesKind = s"all${warm.size}_min_of_${buf.size}"
-    // A failed load measurement is flagged, not silently quiet (r17
-    // advice): ext < 0 anywhere ⇒ the artifact says so.
-    val loadUnmeasured = pre.exists(_ < 0)
-    val canaryJson = canarySamples.map(f2).mkString("[", ",", "]")
-    val canaryMin =
-      if (canarySamples.isEmpty) "-1" else f2(canarySamples.min)
-    val canaryMeta =
-      s""""canary_trusted":$canaryTrusted,"canary_errors":$canaryErrors"""
-    val basis =
-      s"""{"metric":"sf10_total","value":${f2(total)},"unit":"sec",""" +
-      s""""queries":${jmap(warm, f2)},""" +
-      s""""queries_kind":"$queriesKind",""" +
-      s""""warm_pass_totals":$passTotals,"pass_loads":$loadsJson,""" +
-      s""""pre_ext_loads":$preJson,"loud_passes":${buf.size - quiet},""" +
-      s""""load_unmeasured":$loadUnmeasured,""" +
-      s""""canary_s":$canaryJson,"canary_min":$canaryMin,$canaryMeta,""" +
-      s""""n":${names.size},"errors":$errsJson,""" +
-      s""""cold_total":${f2(coldTotal)},""" +
-      s""""sf1_total_25":${f2(names.flatMap(sf1.get).sum)},""" +
-      s""""ratio_total":${f2(
-        if (names.flatMap(sf1.get).sum > 0)
-          total / names.flatMap(sf1.get).sum else -1)},""" +
-      s""""shuffle_partitions":$shuffleParts,"cpus":$cpus,""" +
-      s""""driver_mem":"${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}",""" +
-      s""""wall_s":${f2(elapsedS())},"budget_s":${f2(budgetS)},""" +
-      s""""detail":"BENCH_SF10_DETAIL.json","sf":"10"}"""
-
-    val detail =
-      s"""{
-  "kind": "bench_sf10",
-  "protocol": "cold + min-of-${buf.size} seed-shuffled warm passes, noop sink, load defense as Bench",
-  "fixture": "$sfDir (ScaleUp sf1.0 x10, kScale=10)",
-  "warm_total": ${f2(total)},
-  "cold_total": ${f2(coldTotal)},
-  "warm_queries": ${jmap(warm, _.toString)},
-  "cold_queries": ${jmap(cold, _.toString)},
-  "warm_spread": ${jmap(spread, _.toString)},
-  "sf1_queries": ${jmap(sf1.filter(kv => warm.contains(kv._1)), _.toString)},
-  "sf1_to_sf10_ratio": ${jmap(ratios, f2)},
-  "output_rows": ${outputRows.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")},
-  "output_bound_by_design": ${OutputBound.toSeq.sorted
-        .map(n => s""""$n"""").mkString("[", ",", "]")},
-  "errors": $errsJson,
-  "pass_loads": $loadsJson,
-  "pre_ext_loads": $preJson,
-  "load_unmeasured": $loadUnmeasured,
-  "canary_s": $canaryJson,
-  "canary_min": $canaryMin,
-  "canary_trusted": $canaryTrusted,
-  "canary_errors": $canaryErrors,
-  "warm_pass_totals": $passTotals,
-  "shuffle_partitions": $shuffleParts,
-  "cpus": $cpus,
-  "driver_mem": "${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}",
-  "wall_s": ${f2(elapsedS())}
-}"""
-
+    val r = Report(m, canary.fields, sf1, outputRows, sfDir, shuffleParts,
+      cpus, sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"), budget.elapsedS(),
+      budget.budgetS)
+    val line = basis(r)
     Files.write(Paths.get("BENCH_SF10_BASIS.json"),
-      (basis + "\n").getBytes("UTF-8"))
+      (line + "\n").getBytes("UTF-8"))
     Files.write(Paths.get("BENCH_SF10_DETAIL.json"),
-      (detail + "\n").getBytes("UTF-8"))
-    println(basis)
+      (detail(r) + "\n").getBytes("UTF-8"))
+    println(line)
     spark.stop()
+  }
+
+  /** BENCH_SF10_BASIS.json: the one-line card. */
+  def basis(r: Report): String = {
+    val m = r.m
+    val total = m.warm.values.sum
+    val sf1Total = m.names.flatMap(r.sf1.get).sum
+    obj(Seq("metric" -> quote("sf10_total"), "value" -> f2(total),
+      "unit" -> quote("sec"), "queries" -> jmap(m.warm, f2),
+      // Derived, not hardcoded: an errored query shrinks the label.
+      "queries_kind" -> quote(s"all${m.warm.size}_min_of_${m.passes.size}"),
+      "warm_pass_totals" -> m.passTotalsJson, "pass_loads" -> m.passLoadsJson,
+      "pre_ext_loads" -> jarr(m.preExt.map(f2)), "loud_passes" -> m.loud,
+      "load_unmeasured" -> m.preExt.exists(_ < 0)) ++ r.canary ++
+      Seq("n" -> m.names.size, "errors" -> m.errorsJson,
+        "cold_total" -> f2(m.cold.values.sum), "sf1_total_25" -> f2(sf1Total),
+        "ratio_total" -> f2(if (sf1Total > 0) total / sf1Total else -1),
+        "shuffle_partitions" -> r.shuffleParts, "cpus" -> r.cpus,
+        "driver_mem" -> quote(r.driverMem), "wall_s" -> f2(r.wallS),
+        "budget_s" -> f2(r.budgetS),
+        "detail" -> quote("BENCH_SF10_DETAIL.json"), "sf" -> quote("10")))
+  }
+
+  /** BENCH_SF10_DETAIL.json: per-query cold / warm-min / spread + ratios. */
+  def detail(r: Report): String = {
+    val m = r.m
+    val ratios = m.warm.flatMap { case (n, w) =>
+      r.sf1.get(n).filter(_ > 0).map(b => n -> w / b)
+    }
+    obj(Seq("kind" -> quote("bench_sf10"),
+      "protocol" -> quote(s"cold + min-of-${m.passes.size} seed-shuffled " +
+        "warm passes, noop sink, load defense as Bench"),
+      "fixture" -> quote(s"${r.sfDir} (ScaleUp sf1.0 x10, kScale=10)"),
+      "warm_total" -> f2(m.warm.values.sum), "cold_total" -> f2(m.cold.values.sum),
+      "warm_queries" -> jmap(m.warm), "cold_queries" -> jmap(m.cold),
+      "warm_spread" -> jmap(m.spread),
+      "sf1_queries" -> jmap(r.sf1.filter(kv => m.warm.contains(kv._1))),
+      "sf1_to_sf10_ratio" -> jmap(ratios, f2),
+      "output_rows" -> jmap(r.outputRows),
+      "output_bound_by_design" -> jarr(OutputBound.toSeq.sorted.map(quote)),
+      "errors" -> m.errorsJson, "pass_loads" -> m.passLoadsJson,
+      "pre_ext_loads" -> jarr(m.preExt.map(f2)),
+      "load_unmeasured" -> m.preExt.exists(_ < 0)) ++ r.canary ++
+      Seq("warm_pass_totals" -> m.passTotalsJson,
+        "shuffle_partitions" -> r.shuffleParts, "cpus" -> r.cpus,
+        "driver_mem" -> quote(r.driverMem), "wall_s" -> f2(r.wallS)),
+      pretty = true)
   }
 }

@@ -2,22 +2,23 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.harness.Canary
+import graft.harness.BenchCore._
 
-/** Third-decade (sf100) probe for the LINEAR-input families — r18
-  * verdict item 3: "linear families cost 6–8× per decade" had two
-  * decades of evidence (sf0.1→sf1.0→sf10); a third makes it a law.
+/** Third-decade (sf100) probe for the LINEAR-input families: "linear
+  * families cost 6–8× per decade" had two decades of evidence
+  * (sf0.1→sf1.0→sf10); a third makes it a law.
   *
   * Runs ONLY the families whose input AND output grow linearly with
   * the fixture (sessionize, as-of join, both resamples, moving-window
   * stats, CDC apply/compact, the reference 4-min aggregate) — the
   * pair-graph families are output-quadratic by fixture design
   * (BASELINE §sf10) and adjudicating them at 100× is output growth,
-  * not plan evidence. Protocol mirrors `BenchSf10`: cold pass +
-  * min-of-2 seed-shuffled warm passes, noop sink, per-query cleanup,
-  * drift canary (2 samples/site, `canary_trusted` stamped), external-
-  * load defense. The per-decade ratio column reads the committed sf10
-  * card (`BENCH_SF10_DETAIL.json` `warm_queries`).
+  * not plan evidence. Protocol as `BenchSf10` but min-of-2: cold pass,
+  * warm passes until two are quiet (at most four) or the budget stops
+  * covering another, per-query cleanup, drift canary. The per-decade
+  * ratio column reads the committed sf10 card (`BENCH_SF10_DETAIL.json`
+  * `warm_queries`).
   *
   * Fixture: `target/testdata/sf100` — `ScaleUp` amplification of the
   * sf10 fixture with `kScale = 100` (key shifts clear the sf10 maxima),
@@ -32,19 +33,31 @@ import org.apache.spark.sql.SparkSession
   * probe, basis and detail fit one file).
   */
 object BenchSf100 {
-  /** Linear-input families (r18 verdict item 3's list). */
+  private val WarmPasses = 2
+  private val MaxPasses = 4
+
+  /** Linear-input families. */
   val LinearFamilies: Seq[String] = Seq(
     "sessionize", "asof_purchase_view", "ts_resample_ffill",
     "ts_resample_interp", "window_moving_stats", "cdc_apply",
     "cdc_compact_gc", "agg_sensor_stats")
 
-  def main(args: Array[String]): Unit = {
-    val wallStart = System.nanoTime()
-    def elapsedS(): Double = (System.nanoTime() - wallStart) / 1e9
-    val budgetS = sys.env.get("GRAFT_BENCH_BUDGET_S").map(_.toDouble)
-      .getOrElse(7200.0)
-    def remainingS(): Double = budgetS - elapsedS()
+  /** Everything the card is rendered from. */
+  final case class Report(
+      m: Measured,
+      canary: Seq[(String, Any)],
+      sf10: Map[String, Double],
+      sf10Shuffle: String,
+      loadBar: Double,
+      sfDir: String,
+      shuffleParts: String,
+      cpus: String,
+      driverMem: String,
+      wallS: Double,
+      budgetS: Double)
 
+  def main(args: Array[String]): Unit = {
+    val budget = new Budget(7200.0)
     val sf10Dir = sys.env.getOrElse("SPARK_GRAFT_SF10_DIR",
       "target/testdata/sf10")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF100_DIR",
@@ -52,16 +65,9 @@ object BenchSf100 {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     // Third-decade shuffle sizing: at sf100 the 128-partition sf10
     // protocol puts ~10M wide rows in one task's sort; 256 keeps task
-    // inputs at the sf10 card's per-task size (a real cluster would run
-    // thousands).
+    // inputs at the sf10 card's per-task size.
     val shuffleParts = sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "256")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session(cpus, shuffleParts)
 
     if (!Files.exists(Paths.get(s"$sfDir/lineitem.parquet"))) {
       require(Files.exists(Paths.get(s"$sf10Dir/lineitem.parquet")),
@@ -73,11 +79,9 @@ object BenchSf100 {
     }
 
     val fns = graft.SparkEntry.queries
-    // GRAFT_SF100_FAMILIES: comma-separated subset for targeted re-runs
-    // (the r19 verdict's outlier follow-up re-times window_moving_stats
-    // and ts_resample_interp at 512/1024 shuffle partitions without
-    // paying for the other six). Unknown names are an error — a typo
-    // must not silently produce an empty probe.
+    // GRAFT_SF100_FAMILIES: comma-separated subset for targeted re-runs.
+    // Unknown names are an error — a typo must not silently produce an
+    // empty probe.
     val famFilter: Option[Set[String]] = sys.env.get("GRAFT_SF100_FAMILIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     famFilter.foreach { f =>
@@ -94,182 +98,61 @@ object BenchSf100 {
     // card must not be clobbered by a two-family partition sweep.
     val outPath = sys.env.getOrElse("GRAFT_SF100_OUT", "BENCH_SF100.json")
 
-    def loadNow(): String =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString
-        .split("\\s+").head
-      catch { case _: Throwable => "na" }
-    val clkTck: Double =
-      try {
-        val p = new ProcessBuilder("getconf", "CLK_TCK").start()
-        val out = new String(p.getInputStream.readAllBytes, "UTF-8").trim
-        p.waitFor()
-        val v = out.toDouble
-        if (v > 0) v else 100.0
-      } catch { case _: Throwable => 100.0 }
-    def externalLoad(windowMs: Long = 1000L): Double =
-      try {
-        def snap(): (Long, Long) = {
-          val cpu = scala.io.Source.fromFile("/proc/stat").getLines()
-            .next().trim.split("\\s+").drop(1).map(_.toLong)
-          val busy = cpu.take(3).sum +
-            (if (cpu.length > 6) cpu(5) + cpu(6) else 0L)
-          val self = scala.io.Source.fromFile("/proc/self/stat").mkString
-          val rest = self.substring(self.lastIndexOf(')') + 2).split(" ")
-          (busy, rest(11).toLong + rest(12).toLong)
-        }
-        val (b0, s0) = snap(); Thread.sleep(windowMs)
-        val (b1, s1) = snap()
-        math.max(0.0,
-          ((b1 - b0) - (s1 - s0)) * (1000.0 / clkTck) / windowMs)
-      } catch { case _: Throwable => -1.0 }
+    val canary = new CanaryLog(() => Canary.run(spark), 2, "bench-sf100")
+    val bar = loadBar(cpus)
+    val m = new Protocol(canary, bar, "bench-sf100").run(names,
+      timer(spark, sfDir, "bench-sf100", cleanup = true), WarmPasses,
+      MaxPasses, afford = best => budget.remainingS() > best * 1.2)
 
-    def time(name: String): Option[Double] =
-      try {
-        val t0 = System.nanoTime()
-        fns(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        Some((System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench-sf100] $name failed: ${e.getMessage}")
-        None
-      } finally {
-        try {
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench-sf100] cleanup after $name failed " +
-            s"(continuing): ${e.getMessage}")
-        }
-      }
-
-    val canarySamples = scala.collection.mutable.ArrayBuffer[Double]()
-    var canaryErrors = 0
-    def runCanary(): Unit = (1 to 2).foreach { _ =>
-      try canarySamples += graft.harness.Canary.run(spark)
-      catch { case e: Throwable =>
-        canaryErrors += 1
-        System.err.println(s"[bench-sf100] canary failed: ${e.getMessage}")
-      }
-    }
-    // Trust rule shared via graft.harness.Canary.trusted (r19 advice:
-    // five inline copies could silently diverge).
-    def canaryTrusted: Boolean =
-      graft.harness.Canary.trusted(canarySamples.toSeq)
-    runCanary()
-    System.gc(); Thread.sleep(1500)
-
-    val passLoads = scala.collection.mutable.ArrayBuffer(loadNow())
-    val cold: Map[String, Double] =
-      names.flatMap(n => time(n).map(n -> _)).toMap
-    val coldOk = names.filter(cold.contains)
-    passLoads += loadNow()
-
-    val loadBar = sys.env.get("GRAFT_BENCH_LOAD_BAR").map(_.toDouble)
-      .getOrElse(cpus.toDouble / 4.0)
-    val buf = scala.collection.mutable.ArrayBuffer[Map[String, Double]]()
-    val pre = scala.collection.mutable.ArrayBuffer[Double]()
-    var quiet = 0
-    def runPass(): Unit = {
-      val pass = buf.size + 1
-      runCanary()
-      System.gc(); Thread.sleep(1500)
-      val ext = externalLoad()
-      pre += ext
-      if (ext < 0)
-        System.err.println(
-          s"[bench-sf100] warm pass $pass: external load unmeasurable — " +
-            "pass counted as not-quiet")
-      else if (ext > loadBar)
-        System.err.println(
-          f"[bench-sf100] warm pass $pass: $ext%.1f external cores > " +
-            f"bar $loadBar%.1f — kept for the min, replacement queued")
-      else quiet += 1
-      buf += new scala.util.Random(1000003L * pass)
-        .shuffle(coldOk).flatMap(n => time(n).map(n -> _)).toMap
-      passLoads += loadNow()
-    }
-    // Min-of-2 protocol (the sf10 precedent): 2 quiet passes or budget.
-    while (buf.size < 4 && quiet < 2 &&
-      (buf.isEmpty || remainingS() > buf.map(_.values.sum).min * 1.2))
-      runPass()
-    // Trailing bracket (r19 advice): per-pass canaries run BEFORE their
-    // pass — close the bracket so drift during the final pass is caught.
-    runCanary()
-
-    val warm: Map[String, Double] = coldOk.flatMap { n =>
-      val ss = buf.flatMap(_.get(n))
-      if (ss.isEmpty) None else Some(n -> ss.min)
-    }.toMap
-    val errs = names.filterNot(warm.contains)
-
-    // sf10 per-query basis for the per-decade ratio column — parsed with
-    // a real JSON reader (r19 advice: the old split-on-"warm_queries" +
-    // takeWhile('}') scrape silently truncated on nested braces or key
-    // reordering, yielding a partial basis with no error). Jackson ships
-    // on the Spark classpath — no new dependency. Families absent from
-    // the basis are warned loudly, never silently dropped.
-    val sf10Detail = Paths.get("BENCH_SF10_DETAIL.json")
+    // sf10 per-query basis for the per-decade ratio column. Families absent
+    // from the basis are warned loudly, never silently dropped.
     val (sf10, sf10Shuffle): (Map[String, Double], String) = try {
-      val root = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(Files.readAllBytes(sf10Detail))
-      val wq = root.get("warm_queries")
-      require(wq != null && wq.isObject, "no warm_queries object")
-      import scala.jdk.CollectionConverters._
-      val m = wq.properties().asScala
-        .map(e => e.getKey -> e.getValue.asDouble()).toMap
-      val missing = LinearFamilies.filterNot(m.contains)
+      val root = readJson("BENCH_SF10_DETAIL.json")
+      val q = readQueryMap(root, "warm_queries")
+      val missing = LinearFamilies.filterNot(q.contains)
       if (missing.nonEmpty)
         System.err.println("[bench-sf100] sf10 basis missing families " +
           s"(their ratio rows will be absent): ${missing.mkString(",")}")
-      val sp = Option(root.get("shuffle_partitions"))
-        .map(_.asText()).getOrElse("unknown")
-      (m, sp)
+      (q, Option(root.get("shuffle_partitions")).map(_.asText())
+        .getOrElse("unknown"))
     } catch { case e: Throwable =>
       System.err.println(s"[bench-sf100] sf10 basis unreadable: $e")
       (Map.empty[String, Double], "unknown")
     }
 
-    def f2(d: Double): String =
-      "%.2f".formatLocal(java.util.Locale.ROOT, d)
-    def jmap(m: Map[String, Double], fmt: Double => String): String =
-      m.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""$k":${fmt(v)}""" }
-        .mkString("{", ",", "}")
-    val ratios: Map[String, Double] = warm.flatMap { case (n, w) =>
-      sf10.get(n).filter(_ > 0).map(b => n -> w / b)
-    }
-
-    val json =
-      s"""{
-  "kind": "bench_sf100",
-  "protocol": "cold + min-of-${buf.size} seed-shuffled warm passes, noop sink, per-query cleanup, load defense as BenchSf10",
-  "fixture": "$sfDir (ScaleUp sf10 x10, kScale=100; linear families ONLY)",
-  "families": "linear-input (r18 verdict item 3)",
-  "warm_total": ${f2(warm.values.sum)},
-  "cold_total": ${f2(cold.values.sum)},
-  "warm_queries": ${jmap(warm, _.toString)},
-  "cold_queries": ${jmap(cold, _.toString)},
-  "sf10_queries": ${jmap(sf10.filter(kv => warm.contains(kv._1)), _.toString)},
-  "sf10_to_sf100_ratio": ${jmap(ratios, f2)},
-  "ratio_note": "denominator = committed BENCH_SF10_DETAIL.json warm_queries (shuffle_partitions $sf10Shuffle, adjudicated +25.6% box-smeared in BASELINE §sf10) vs this run's shuffle $shuffleParts — cross-run, cross-config ratios carry regime + config noise the canary cannot remove (r19 advice: the caveat must ride the artifact, not only BASELINE.md)",
-  "errors": ${errs.map(n => s""""$n"""").mkString("[", ",", "]")},
-  "pass_loads": ${passLoads.map(l => s""""$l"""").mkString("[", ",", "]")},
-  "pre_ext_loads": ${pre.map(f2).mkString("[", ",", "]")},
-  "load_bar": ${f2(loadBar)},
-  "loud_passes": ${buf.size - quiet},
-  "canary_s": ${canarySamples.map(f2).mkString("[", ",", "]")},
-  "canary_min": ${
-        if (canarySamples.isEmpty) "-1" else f2(canarySamples.min)},
-  "canary_trusted": $canaryTrusted,
-  "canary_errors": $canaryErrors,
-  "shuffle_partitions": $shuffleParts,
-  "cpus": $cpus,
-  "driver_mem": "${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}",
-  "wall_s": ${f2(elapsedS())},
-  "budget_s": ${f2(budgetS)}
-}"""
+    val json = card(Report(m, canary.fields, sf10, sf10Shuffle, bar, sfDir,
+      shuffleParts, cpus, sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"),
+      budget.elapsedS(), budget.budgetS))
     Files.write(Paths.get(outPath), (json + "\n").getBytes("UTF-8"))
     println(json)
     spark.stop()
+  }
+
+  def card(r: Report): String = {
+    val m = r.m
+    val ratios = m.warm.flatMap { case (n, w) =>
+      r.sf10.get(n).filter(_ > 0).map(b => n -> w / b)
+    }
+    obj(Seq("kind" -> quote("bench_sf100"),
+      "protocol" -> quote(s"cold + min-of-${m.passes.size} seed-shuffled " +
+        "warm passes, noop sink, per-query cleanup, load defense as BenchSf10"),
+      "fixture" -> quote(
+        s"${r.sfDir} (ScaleUp sf10 x10, kScale=100; linear families ONLY)"),
+      "families" -> quote("linear-input"),
+      "warm_total" -> f2(m.warm.values.sum), "cold_total" -> f2(m.cold.values.sum),
+      "warm_queries" -> jmap(m.warm), "cold_queries" -> jmap(m.cold),
+      "sf10_queries" -> jmap(r.sf10.filter(kv => m.warm.contains(kv._1))),
+      "sf10_to_sf100_ratio" -> jmap(ratios, f2),
+      "ratio_note" -> quote("denominator = committed BENCH_SF10_DETAIL.json " +
+        s"warm_queries (shuffle_partitions ${r.sf10Shuffle}, adjudicated " +
+        "+25.6% box-smeared in BASELINE §sf10) vs this run's shuffle " +
+        s"${r.shuffleParts} — cross-run, cross-config ratios carry regime + " +
+        "config noise the canary cannot remove"),
+      "errors" -> m.errorsJson, "pass_loads" -> m.passLoadsJson,
+      "pre_ext_loads" -> jarr(m.preExt.map(f2)), "load_bar" -> f2(r.loadBar),
+      "loud_passes" -> m.loud) ++ r.canary ++
+      Seq("shuffle_partitions" -> r.shuffleParts, "cpus" -> r.cpus,
+        "driver_mem" -> quote(r.driverMem), "wall_s" -> f2(r.wallS),
+        "budget_s" -> f2(r.budgetS)), pretty = true)
   }
 }

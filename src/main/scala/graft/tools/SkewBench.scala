@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Cdc, Dedup, Sessionize, WindowOps}
@@ -35,13 +35,7 @@ object SkewBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "target/testdata/sf1.0"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.harness.BenchCore.session(cpus, cpus)
     val out = "target/testdata/skew"
     Files.createDirectories(Paths.get(out))
 

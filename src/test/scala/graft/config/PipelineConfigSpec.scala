@@ -14,7 +14,6 @@ class PipelineConfigSpec extends AnyFunSuite {
     assert(cfg.jdbc.alertsTable === "alerts")
     assert(cfg.jdbc.aggregatesTable === "aggregated_stats")
     assert(cfg.watermarkDelay === "1 minute")
-    assert(cfg.windowDuration === "4 minutes")
   }
 
   test("reference .env keys are honored and compose into the JDBC url") {
