@@ -74,26 +74,6 @@ final class Pipeline(
       .where(col("severity").isin("critical", "warning"))
   }
 
-  /** OPTIONAL fifth unit, no reference counterpart: statistical outliers
-    * per sensor_type over the live readings — the adaptive complement to
-    * [[graft.ops.AlertRules]]' fixed thresholds (a sensor drifting WITHIN
-    * its legal band still flags once it departs its own distribution).
-    * Readings carry no event id, so xxhash64(sensor_id, timestamp) stands
-    * in; state is O(1) per sensor_type and idles out after an hour.
-    */
-  def anomalyFrame(kafka: DataFrame): DataFrame =
-    graft.ops.Anomaly.streamingOutliers(
-      Parse.withEventTime(Parse.fromKafka(kafka))
-        .select(
-          xxhash64(col("sensor_id"), col("timestamp")).alias("event_id"),
-          col("event_time").alias("ts"),
-          col("sensor_type").alias("event_type"),
-          col("value"))
-        .withWatermark("ts", cfg.watermarkDelay),
-      threshold = 3.0, minN = 30L,
-      idleTimeout = Some(3600000L)).toDF()
-      .withColumnRenamed("event_type", "sensor_type")
-
   // ─── query starters ─────────────────────────────────────────────────────
 
   def startPersistence(): StreamingQuery =
@@ -114,15 +94,6 @@ final class Pipeline(
   def startMailNotifier(): StreamingQuery =
     track(Sinks.notifierSink(
       mailableFrame(Sources.alertStream(spark, cfg)), cfg, notifier))
-
-  /** Opt-in (not part of [[startAll]] — reference parity keeps four
-    * units): console-sink the statistical anomaly stream.
-    */
-  def startAnomalyMonitor(): StreamingQuery =
-    track(Sinks.console(anomalyFrame(Sources.sensorStream(spark, cfg)))
-      .option("checkpointLocation",
-        s"${cfg.checkpointRoot}/anomaly_monitor")
-      .start())
 
   // Queries THIS pipeline started — stopAll must not reach into
   // spark.streams.active, which would tear down unrelated queries sharing

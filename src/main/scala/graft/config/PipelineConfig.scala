@@ -46,8 +46,7 @@ final case class PipelineConfig(
     kafka: KafkaConfig,
     jdbc: JdbcConfig,
     smtp: SmtpConfig,
-    checkpointRoot: String,
-    watermarkDelay: String)
+    checkpointRoot: String)
 
 object PipelineConfig {
 
@@ -80,7 +79,6 @@ object PipelineConfig {
         recipient = get("ALERT_RECIPIENT", "ops@example.com"),
         notifier = get("ALERT_NOTIFIER", "log"),
         startTls = get("SMTP_STARTTLS", "true").toBoolean),
-      checkpointRoot = get("CHECKPOINT_ROOT", "/tmp/checkpoints/graft"),
-      watermarkDelay = get("WATERMARK_DELAY", "1 minute"))
+      checkpointRoot = get("CHECKPOINT_ROOT", "/tmp/checkpoints/graft"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, Row, SaveMode}
 
 import graft.config.{JdbcConfig, PipelineConfig}
@@ -35,34 +35,42 @@ object Sinks {
       .mode(SaveMode.Append)
       .save()
 
-  /** A5 + K6: the per-batch guard and diagnostics. `isEmpty` scans at most
-    * one partition-row, unlike the reference's double `count()`
-    * (SURVEY §2.9.5).
+  /** The one `foreachBatch` starter behind every sink below. A query is
+    * one checkpointed unit with its own offset log, so the name and the
+    * checkpoint travel together: append mode, checkpoint at
+    * `<checkpointRoot>/<name>`, and `body` runs only on a non-empty batch
+    * (A5 + K6: `isEmpty` scans at most one partition-row, unlike the
+    * reference's double `count()`, SURVEY §2.9.5).
     */
-  private def nonEmpty(df: DataFrame, batchId: Long, what: String): Boolean =
-    if (df.isEmpty) { log(s"[batch $batchId] no $what to write"); false }
-    else true
+  private def startForeachBatch(
+      stream: DataFrame, name: String, checkpointRoot: String, what: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .queryName(name)
+      .outputMode("append")
+      .option("checkpointLocation", s"$checkpointRoot/$name")
+      .foreachBatch { (df: DataFrame, batchId: Long) =>
+        if (df.isEmpty) log(s"[batch $batchId] no $what to write")
+        else body(df, batchId)
+      }
+      .start()
 
   private def log(msg: String): Unit = println(msg)
 
-  /** Wrap a stream in a checkpointed foreachBatch JDBC append (K1/K3). */
+  /** Wrap a stream in a checkpointed foreachBatch JDBC append (K1/K3).
+    * `writer` replaces the plain append, e.g. with
+    * `idempotentBatchWriter(jdbc, table)`.
+    */
   def jdbcStream(
       stream: DataFrame,
       jdbc: JdbcConfig,
       table: String,
       checkpoint: String,
       queryName: String,
-      writer: (DataFrame, String) => Unit = null): StreamingQuery = {
-    val write: (DataFrame, String) => Unit =
-      if (writer != null) writer else (df, t) => jdbcAppend(df, jdbc, t)
-    stream.writeStream
-      .queryName(queryName)
-      .outputMode("append")
-      .option("checkpointLocation", s"$checkpoint/$queryName")
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        if (nonEmpty(df, batchId, table)) write(df, table)
-      }
-      .start()
+      writer: (DataFrame, Long) => Unit = null): StreamingQuery = {
+    val write: (DataFrame, Long) => Unit =
+      if (writer != null) writer else (df, _) => jdbcAppend(df, jdbc, table)
+    startForeachBatch(stream, queryName, checkpoint, table)(write)
   }
 
   /** Replay-safe JDBC batch writer — the commit-marker upgrade of plain
@@ -144,23 +152,6 @@ object Sinks {
     } finally conn.close()
   }
 
-  /** [[jdbcStream]] with the replay-safe writer wired in. */
-  def jdbcIdempotentStream(
-      stream: DataFrame,
-      jdbc: JdbcConfig,
-      table: String,
-      checkpoint: String,
-      queryName: String): StreamingQuery =
-    stream.writeStream
-      .queryName(queryName)
-      .outputMode("append")
-      .option("checkpointLocation", s"$checkpoint/$queryName")
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        if (nonEmpty(df, batchId, table))
-          idempotentBatchWriter(jdbc, table)(df, batchId)
-      }
-      .start()
-
   /** K2+K4 fused: ONE streaming query whose foreachBatch writes alerts to
     * both JDBC and Kafka.
     *
@@ -194,21 +185,15 @@ object Sinks {
           .option("kafka.bootstrap.servers", cfg.kafka.bootstrapServers)
           .option("topic", cfg.kafka.alertTopic)
           .save()
-    alerts.writeStream
-      .queryName("alerts_dual_sink")
-      .outputMode("append")
-      .option("checkpointLocation", s"${cfg.checkpointRoot}/alerts_dual_sink")
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        if (nonEmpty(df, batchId, "alerts")) {
-          df.persist()
-          try {
-            jdbcW(df)
-            kafkaW(AlertPayload.toKafka(df))
-            log(s"[batch $batchId] wrote alerts to jdbc+kafka")
-          } finally df.unpersist()
-        }
-      }
-      .start()
+    startForeachBatch(alerts, "alerts_dual_sink", cfg.checkpointRoot,
+        "alerts") { (df, batchId) =>
+      df.persist()
+      try {
+        jdbcW(df)
+        kafkaW(AlertPayload.toKafka(df))
+        log(s"[batch $batchId] wrote alerts to jdbc+kafka")
+      } finally df.unpersist()
+    }
   }
 
   /** Hard cap on driver-side email materialization per micro-batch. Alerts
@@ -230,55 +215,21 @@ object Sinks {
   def notifierSink(
       mailableAlerts: DataFrame,
       cfg: PipelineConfig,
-      notifier: AlertNotifier,
-      checkpoint: String = null): StreamingQuery = {
-    val cp = if (checkpoint != null) checkpoint
-             else s"${cfg.checkpointRoot}/mail_notifier"
+      notifier: AlertNotifier): StreamingQuery = {
     val recipient = cfg.smtp.recipient
-    mailableAlerts.writeStream
-      .queryName("mail_notifier")
-      .outputMode("append")
-      .option("checkpointLocation", cp)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        if (nonEmpty(df, batchId, "mailable alerts")) {
-          val sent = df.limit(MaxEmailsPerBatch).collect()
-          sent.foreach { row: Row =>
-            notifier.send(AlertEmail.fromAlertRow(row, recipient))
-          }
-          if (sent.length == MaxEmailsPerBatch) {
-            val total = df.count()
-            if (total > MaxEmailsPerBatch)
-              log(s"[batch $batchId] ALERT STORM: $total mailable alerts, " +
-                s"capped at $MaxEmailsPerBatch emails, " +
-                s"${total - MaxEmailsPerBatch} dropped")
-          }
-        }
+    startForeachBatch(mailableAlerts, "mail_notifier", cfg.checkpointRoot,
+        "mailable alerts") { (df, batchId) =>
+      val sent = df.limit(MaxEmailsPerBatch).collect()
+      sent.foreach { row: Row =>
+        notifier.send(AlertEmail.fromAlertRow(row, recipient))
       }
-      .start()
+      if (sent.length == MaxEmailsPerBatch) {
+        val total = df.count()
+        if (total > MaxEmailsPerBatch)
+          log(s"[batch $batchId] ALERT STORM: $total mailable alerts, " +
+            s"capped at $MaxEmailsPerBatch emails, " +
+            s"${total - MaxEmailsPerBatch} dropped")
+      }
+    }
   }
-
-  /** Streaming parquet archive sink: the data-lake landing zone the
-    * reference lacks (Postgres was its only durable store). Append-mode
-    * file sink with its own checkpoint; partition by a low-cardinality
-    * column (sensor_type) so downstream scans prune.
-    */
-  def parquetArchive(
-      stream: DataFrame,
-      dir: String,
-      checkpoint: String,
-      partitionBy: Seq[String] = Seq("sensor_type")): StreamingQuery = {
-    val writer = stream.writeStream
-      .queryName("parquet_archive")
-      .format("parquet")
-      .option("path", dir)
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-      .start()
-  }
-
-  /** Debug console sink (K6). */
-  def console(stream: DataFrame, numRows: Int = 20): DataStreamWriter[Row] =
-    stream.writeStream.format("console")
-      .option("numRows", numRows).outputMode("append")
 }

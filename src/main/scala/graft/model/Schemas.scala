@@ -38,13 +38,8 @@ object Schemas {
     StructField("unit", StringType),
     StructField("metadata", metadata)))
 
-  /** Flat (post-parse) reading columns, canonical order. */
-  val flatReadingColumns: Seq[String] = Seq(
-    "sensor_id", "sensor_type", "building", "floor", "room",
-    "timestamp", "value", "unit", "battery_level", "signal_strength")
-
-  /** Flat reading schema (the archive/file-source shape — what
-    * Parse.jsonToReadings emits).
+  /** Flat (post-parse) reading schema, canonical order: what
+    * Parse.jsonToReadings emits.
     */
   val flatReadingSchema: StructType = StructType(Seq(
     StructField("sensor_id", StringType),

@@ -95,34 +95,4 @@ object Aggregates {
             col("window.end").alias("window_end"),
             col("avg_value"), col("count"))): _*)
   }
-
-  /** Streaming distinct-user count per (window, keys): the streaming face
-    * of Olap.dailyActiveUsers. EXACT `countDistinct` is unsupported over
-    * an unbounded stream for a reason — its state is every id ever seen —
-    * so this uses the HLL++ sketch (`approx_count_distinct`), whose
-    * per-group state is a fixed register set the state store can merge
-    * incrementally; the watermark finalizes windows for append mode. The
-    * standard streaming-DAU design, at `rsd` relative error.
-    */
-  def windowedDistinct(
-      df: DataFrame,
-      timeCol: String,
-      idCol: String,
-      keys: Seq[String] = Seq.empty,
-      windowDur: String = "1 day",
-      watermarkDelay: Option[String] = None,
-      rsd: Double = 0.05): DataFrame = {
-    val base = watermarkDelay.fold(df)(d => df.withWatermark(timeCol, d))
-    val groupCols: Seq[Column] = window(col(timeCol), windowDur) +: keys.map(col)
-    base
-      .groupBy(groupCols: _*)
-      .agg(
-        approx_count_distinct(col(idCol), rsd).alias("n_distinct_approx"),
-        count(lit(1)).alias("n_events"))
-      .select(
-        (keys.map(col) ++ Seq(
-          col("window.start").alias("window_start"),
-          col("window.end").alias("window_end"),
-          col("n_distinct_approx"), col("n_events"))): _*)
-  }
 }

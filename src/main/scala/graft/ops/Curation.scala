@@ -310,55 +310,6 @@ object Curation {
       .where(col("shared_grams") >= minShared)
   }
 
-  /** Writes a curated manifest partitioned by predicted language — the
-    * storage layout a training-mix sampler scans. A per-language directory
-    * tree turns a one-language mix draw into a partition-pruned read
-    * instead of a full-corpus scan; at 100 TB that is the difference
-    * between touching one directory and every file.
-    */
-  def writeCurated(curated: DataFrame, path: String): Unit =
-    curated.write.mode("overwrite")
-      .partitionBy("predicted_lang").parquet(path)
-
-  /** Publishes documents as SHARDED JSON-Lines — the interchange format
-    * training loaders actually consume (one JSON object per line, gzip
-    * per shard directory). Shard and in-shard order use the SAME hash-
-    * family draws as [[shuffleShards]] ([[ShardHashIndex]] /
-    * [[OrderHashIndex]]), so the layout on disk IS the manifest that
-    * operator emits: membership reproducible across runs and engines,
-    * each shard a content-unbiased sample, and a loader streaming shards
-    * in file order sees shuffled data with no shuffle of its own.
-    *
-    * Computed inline rather than via [[shuffleShards]] because the
-    * payload must ride to the writer anyway: `repartition(n, shard)` +
-    * `sortWithinPartitions` moves the text exactly ONCE and sorts
-    * per-shard (embarrassingly parallel) — joining the manifest back on
-    * doc_id would shuffle the text a second time for nothing. One task
-    * per shard → one file per shard, bounding task memory and file
-    * count at any corpus size; gzip matches loaders that stream shards
-    * whole (it costs splittability, which sharding already provides).
-    */
-  def exportJsonl(docs: DataFrame, path: String, nShards: Int = 64): Unit = {
-    require(nShards > 0, s"shard count must be positive, got $nShards")
-    val id = col("doc_id").cast("string")
-    val shard = pmod(Dedup.hashAt(ShardHashIndex, id), lit(nShards.toLong))
-      .cast("int")
-    docs
-      .withColumn("shard", shard)
-      .withColumn("ord", Dedup.hashAt(OrderHashIndex, id))
-      .repartition(nShards, col("shard"))
-      // Leads with the partition column: FileFormatWriter REQUIRES rows
-      // sorted by partition cols and would re-sort (destroying the ord
-      // order) if the existing sort didn't already start with `shard` —
-      // semantically free here since each task holds exactly one shard.
-      .sortWithinPartitions(col("shard"), col("ord"), col("doc_id"))
-      .drop("ord")
-      .write.mode("overwrite")
-      .partitionBy("shard")
-      .option("compression", "gzip")
-      .json(path)
-  }
-
   /** Deterministic train/val/test assignment: each document's md5-derived
     * hash bucket (0-9999, family member [[SplitHashIndex]] — deliberately a
     * DIFFERENT member than [[sampleByLanguage]]'s, so split membership is

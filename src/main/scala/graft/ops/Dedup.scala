@@ -922,32 +922,21 @@ object Dedup {
     */
   private val FinishProbeEvery = 3
 
-  /** Session-conf override: keep AQE ON inside the iterative loops
-    * (CC label propagation, fixed-round PageRank). Default `false` — AQE
-    * is DISABLED for the loop rounds only (candidate generation and edge
-    * materialization keep the session setting): inside a round every
-    * frame is the materialized, already-hash-partitioned graph (node- or
-    * edge-scale, orders of magnitude below the corpus), so AQE's runtime
-    * re-planning buys nothing while its per-shuffle-stage sub-jobs
-    * multiply driver round-trips — the §1-measured dominant cost of
-    * these loops. At 100 TB the loop frames are the SAME bounded graphs
-    * (the corpus-scale work happened before the loop), so the default
-    * holds there too; flip the key for a pathological skewed graph.
-    */
-  val LoopAqeKey = "spark.graft.loop.aqe"
-
-  /** Run `body` with AQE disabled unless [[LoopAqeKey]] asks to keep it;
-    * always restores the previous session value.
+  /** Run `body` (the CC label-propagation and fixed-round PageRank
+    * rounds) with AQE disabled, restoring the session value afterwards.
+    * Inside a round every frame is the materialized, already
+    * hash-partitioned graph, orders of magnitude below the corpus, so
+    * AQE's runtime re-planning buys nothing while its per-shuffle-stage
+    * sub-jobs multiply driver round-trips, the measured dominant cost of
+    * these loops. Candidate generation and edge materialization keep the
+    * session setting.
     */
   private def withLoopAqe[T](
       sess: org.apache.spark.sql.SparkSession)(body: => T): T = {
     val AqeKey = "spark.sql.adaptive.enabled"
-    if (sess.conf.get(LoopAqeKey, "false").toBoolean) body
-    else {
-      val prev = sess.conf.get(AqeKey, "true")
-      sess.conf.set(AqeKey, "false")
-      try body finally sess.conf.set(AqeKey, prev)
-    }
+    val prev = sess.conf.get(AqeKey, "true")
+    sess.conf.set(AqeKey, "false")
+    try body finally sess.conf.set(AqeKey, prev)
   }
 
   /** Fused count-in-action (guide §2.4: batch work between actions): the
@@ -1290,64 +1279,6 @@ object Dedup {
     */
   def streamingExact(stream: DataFrame, keys: Seq[String]): DataFrame =
     stream.dropDuplicatesWithinWatermark(keys)
-
-  /** Streaming face of [[lineDedup]] — with one honest, DELIBERATE
-    * semantic shift. CCNet's batch rule drops ALL copies of a duplicated
-    * line; over an append stream that is unimplementable: by the time the
-    * second copy arrives, the first has already been emitted, and undoing
-    * it would need retractions no append sink supports. Worse, a drop-all
-    * rule's state can never be evicted — whether a line is duplicated
-    * "across the corpus" is only known at end-of-corpus, so its state IS
-    * the corpus. The streaming rule is therefore FIRST-WINS: the first
-    * occurrence of an (eligible) line inside the watermark horizon
-    * survives, later copies are dropped. The boilerplate the batch rule
-    * exists to strip — headers, nav bars, cookie banners — repeats many
-    * times, so the two rules converge on those lines and differ only on
-    * the first sighting (SURVEY §5.3 carries this as the documented
-    * batch/stream divergence; this is a different operator contract, not
-    * an approximation of the batch one).
-    *
-    * Shape: lines explode map-side with their position; dedup state is
-    * keyed by the 8-byte xxhash64 (the batch operator's Exchange
-    * discipline), bounded by horizon × line rate and evicted by the
-    * watermark. Ineligible short lines bypass state entirely (kept
-    * verbatim — the batch eligibility rule). Callers `withWatermark`
-    * upstream, run append mode, and rebuild documents per micro-batch
-    * with [[rebuildFromKeptLines]] in `foreachBatch` (batch-local
-    * groupBy; no cross-batch state — a document's lines all ride one
-    * input row, so they land in one batch).
-    */
-  def streamingLineDedup(
-      stream: DataFrame,
-      minChars: Int = LineDedupMinChars): DataFrame = {
-    val parts = split(coalesce(col("text"), lit("")), "\n")
-    val lines = stream.select(
-      col("doc_id"), col("event_time"),
-      posexplode(parts).as(Seq("line_no", "line")),
-      size(parts).alias("n_lines"))
-    val eligible = lines
-      .where(length(col("line")) >= minChars)
-      .withColumn("h", xxhash64(col("line")))
-      .dropDuplicatesWithinWatermark(Seq("h"))
-      .drop("h")
-    eligible.unionByName(lines.where(length(col("line")) < minChars))
-  }
-
-  /** Per-micro-batch document rebuild for [[streamingLineDedup]]'s kept
-    * lines: one row per document with surviving lines re-joined in
-    * position order — `(doc_id, n_lines, n_dropped, text_dedup)`, the
-    * batch operator's output shape. */
-  def rebuildFromKeptLines(kept: DataFrame): DataFrame =
-    kept
-      .groupBy(col("doc_id"), col("n_lines"))
-      .agg(sort_array(collect_list(struct(col("line_no"), col("line"))))
-        .alias("ls"))
-      .select(
-        col("doc_id"),
-        col("n_lines"),
-        (col("n_lines") - size(col("ls"))).alias("n_dropped"),
-        array_join(transform(col("ls"), x => x("line")), "\n")
-          .alias("text_dedup"))
 
   /** Consecutive word bigrams ("w1 w2"), order-preserving — native
     * codegen'd loop (graft.functions.Bigrams), bit-identical to the
@@ -1906,7 +1837,7 @@ object Dedup {
       sym.join(deg, "src").repartition(col("src")))
     var ranks = deg.select(col("src").alias("doc_id"),
       lit(1000000L).alias("rank_micro"))
-    // Rounds run with AQE off (see [[LoopAqeKey]]): every frame in here
+    // Rounds run with AQE off (see [[withLoopAqe]]): every frame in here
     // is the materialized hash-partitioned graph, and AQE's per-shuffle
     // sub-jobs were the measured per-round cost (§1 probe: one stage job
     // per round on a kilobyte-scale rank table).

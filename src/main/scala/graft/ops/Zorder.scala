@@ -3,17 +3,17 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Z-ORDER (Morton-curve) data layout: interleave the bits of two bounded
+/** Z-ORDER (Morton curve): interleave the bits of two bounded
   * dimensions into one clustering key, so sorting by the key co-locates
   * rows that are close in BOTH dimensions at once.
   *
   * Why this is a 100 TB operator: parquet row-group pruning works off
   * per-file/per-group min-max stats. A table sorted by one column prunes
-  * on that column only — a predicate on the second reads everything. Laid
-  * out along the Z-curve, every file covers a small RECTANGLE of the
-  * (a, b) space, so range predicates on EITHER (or both) dimensions skip
-  * most files — the standard lakehouse layout trick for two-dimensional
-  * scan patterns (time × tenant, user × day).
+  * on that column only — a predicate on the second reads everything.
+  * Range-partitioned and sorted by the key, every file covers a small
+  * RECTANGLE of the (a, b) space, so range predicates on EITHER (or both)
+  * dimensions skip most files — the standard lakehouse layout trick for
+  * two-dimensional scan patterns (time × tenant, user × day).
   *
   * The key itself is a pure codegen'd bit-interleave projection — no
   * shuffle, no UDF — and exactly reproducible in the oracle's integer
@@ -54,23 +54,4 @@ object Zorder {
       col("event_id"), za.alias("za"), zb.alias("zb"),
       zkey(za, zb, ZBits).alias("zkey"))
   }
-
-  /** Write `df` laid out along the Z-curve: range-partition by the key
-    * (files tile the curve — each holds a contiguous key run, i.e. a
-    * small (a,b) rectangle) and sort within partitions so row groups
-    * tile it too. `repartitionByRange` samples the key distribution, so
-    * skewed dimensions still yield balanced files.
-    */
-  def writeZordered(
-      df: DataFrame,
-      a: Column,
-      b: Column,
-      path: String,
-      files: Int = 8,
-      bits: Int = 16): Unit =
-    df.withColumn("__zkey", zkey(a, b, bits))
-      .repartitionByRange(files, col("__zkey"))
-      .sortWithinPartitions(col("__zkey"))
-      .drop("__zkey")
-      .write.mode("overwrite").parquet(path)
 }

@@ -42,8 +42,6 @@ object QueriesCorpus {
       col("doc_id") % 10 === 0, minShared = 3, dfCap = 20)
 
   // Split fractions shared with the oracle twin (integer bucket bounds).
-
-  // Split fractions shared with the oracle twin (integer bucket bounds).
   private val SplitFractions =
     Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05)
 
@@ -143,10 +141,6 @@ object QueriesCorpus {
   // Per-language token targets shared with the oracle twin: sized against
   // the fixture's per-language token mass so the mix exercises both >1
   // whole epochs and a fractional remainder.
-
-  // Per-language token targets shared with the oracle twin: sized against
-  // the fixture's per-language token mass so the mix exercises both >1
-  // whole epochs and a fractional remainder.
   private val MixTargets =
     Seq("en" -> 50000L, "fr" -> 12000L, "de" -> 4000L)
 
@@ -228,10 +222,6 @@ object QueriesCorpus {
   // Train/val drift chain (Curation.tokenDrift twin): hashed buckets per
   // split, conditional histogram, Jelinek-Mercer smoothing, KL + JS sums
   // exposed via dfa (klp, jsp) and dft (ntr, nva, seen).
-
-  // Train/val drift chain (Curation.tokenDrift twin): hashed buckets per
-  // split, conditional histogram, Jelinek-Mercer smoothing, KL + JS sums
-  // exposed via dfa (klp, jsp) and dft (ntr, nva, seen).
   private lazy val driftCtesSql = {
     val B = Curation.DsirBuckets
     val lam = Curation.DriftUniformMix
@@ -272,9 +262,6 @@ object QueriesCorpus {
        |  FROM dfp
        |)""".stripMargin
   }
-
-  // Length-histogram chain (Curation.lengthHistogram twin) grouped into
-  // lhg (bucket, n_docs, total_tokens).
 
   // Length-histogram chain (Curation.lengthHistogram twin) grouped into
   // lhg (bucket, n_docs, total_tokens).

@@ -24,11 +24,6 @@ object QueriesMultimodal {
   // in lockstep with Multimodal.ImageCodec.syntheticPng. Sequential
   // unnests (xs then px) expand the w×h pixel grid per document; `ch`
   // carries the three channel values of every pixel.
-
-  // Pixel-formula CTEs shared by the real-decode oracle twins — MUST stay
-  // in lockstep with Multimodal.ImageCodec.syntheticPng. Sequential
-  // unnests (xs then px) expand the w×h pixel grid per document; `ch`
-  // carries the three channel values of every pixel.
   private val pngPixelCtesSql =
     """d AS (
       |  SELECT doc_id, 8 + doc_id % 9 AS w, 8 + (doc_id // 9) % 9 AS h
@@ -54,11 +49,6 @@ object QueriesMultimodal {
     s"((doc_id * 31 + ($sx) * 7 + ($sy) * 13) % 256 + " +
       s"(doc_id * 17 + ($sx) * 11 + ($sy) * 5) % 256 + " +
       s"(doc_id * 23 + ($sx) * 3 + ($sy) * 19) % 256) // 3"
-
-  // The 6×10 sampling grid per document, aHash bit threshold via a
-  // per-doc window mean, dHash bits via 11-column adjacent comparisons;
-  // both assembled into 60-bit BIGINTs (bit 59 max — constructible on
-  // both engines, unlike bit 63).
 
   // The 6×10 sampling grid per document, aHash bit threshold via a
   // per-doc window mean, dHash bits via 11-column adjacent comparisons;
@@ -99,25 +89,12 @@ object QueriesMultimodal {
     * arithmetic with REAL casts over the synthetic pixel formula, so the
     * codec path is oracle-checked bit-for-bit.
     */
-
-  /** The REAL-decode feature stage with a driver-sortable shape: one
-    * double column per luminance-histogram bin, computed from pixels that
-    * went through an actual PNG encode→ImageIO decode round-trip.
-    * float→double widening is exact, and DuckDB reproduces the float
-    * arithmetic with REAL casts over the synthetic pixel formula, so the
-    * codec path is oracle-checked bit-for-bit.
-    */
   private def mmFeatures(s: SparkSession, dir: String): DataFrame = {
     val feats = Multimodal.extractFeatures(
       Multimodal.pngMedia(s, dir), Multimodal.ImageLumaExtractor)
     feats.select(col("media_id") +: (0 until 16).map(j =>
       element_at(col("features"), j + 1).cast("double").alias(s"f$j")): _*)
   }
-
-  /** Exact-integer face of the real decode stage: dims, pixel count, and
-    * per-channel sums as longs (bit-stable, no float accumulation), plus
-    * the derived double means rounded once.
-    */
 
   /** Exact-integer face of the real decode stage: dims, pixel count, and
     * per-channel sums as longs (bit-stable, no float accumulation), plus
@@ -135,19 +112,11 @@ object QueriesMultimodal {
   /** The no-codec fallback path (mapPartitions byte histogram over opaque
     * text payloads) with the same sortable shape.
     */
-
-  /** The no-codec fallback path (mapPartitions byte histogram over opaque
-    * text payloads) with the same sortable shape.
-    */
   private def mmFeaturesBytes(s: SparkSession, dir: String): DataFrame = {
     val feats = Multimodal.extractFeatures(Multimodal.documentMedia(s, dir))
     feats.select(col("media_id") +: (0 until 16).map(j =>
       element_at(col("features"), j + 1).cast("double").alias(s"f$j")): _*)
   }
-
-  /** The frame-sampling stage, frames compared as uppercase hex (DuckDB
-    * cannot hash a BLOB, and a sliced frame need not be valid UTF-8).
-    */
 
   /** The frame-sampling stage, frames compared as uppercase hex (DuckDB
     * cannot hash a BLOB, and a sliced frame need not be valid UTF-8).

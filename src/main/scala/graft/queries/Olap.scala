@@ -96,9 +96,6 @@ object QueriesOlap {
 
   // Funnel stage CTEs — shared by funnel_conversion / funnel_stages so the
   // snapshot and incremental twins cannot drift.
-
-  // Funnel stage CTEs — shared by funnel_conversion / funnel_stages so the
-  // snapshot and incremental twins cannot drift.
   private val funnelCtes =
     """ev AS (
       |  SELECT user_id, event_type,

@@ -75,10 +75,6 @@ object QueryShared {
   // Base-hash + affine family twin of Dedup.minhashSignatures: one md5 per
   // shingle, k affine transforms. Constants come from Dedup.affineParams so
   // both engines agree bit-for-bit.
-
-  // Base-hash + affine family twin of Dedup.minhashSignatures: one md5 per
-  // shingle, k affine transforms. Constants come from Dedup.affineParams so
-  // both engines agree bit-for-bit.
   private[queries] val sigSql = {
     val entries = Dedup.affineParams(MinhashK).map { case (a, b) =>
       s"list_min(list_transform(hs, h -> (h * $a + $b) % ${Dedup.AffineMod}))"
@@ -126,11 +122,6 @@ object QueryShared {
   // Dedup.clusters): edges → transitive reach → min-label per doc. Shared
   // by dedup_clusters / dedup_keepers / corpus_curate so the three oracles
   // cannot drift apart.
-
-  // Connected components of the LSH candidate graph (recursive twin of
-  // Dedup.clusters): edges → transitive reach → min-label per doc. Shared
-  // by dedup_clusters / dedup_keepers / corpus_curate so the three oracles
-  // cannot drift apart.
   private[queries] val componentsSql =
     s"""edges AS (
        |  SELECT a_id, b_id FROM est WHERE est_sim >= $MinhashEstThreshold
@@ -143,10 +134,6 @@ object QueryShared {
        |), labels AS (
        |  SELECT doc_id, min(label) AS cluster_id FROM reach GROUP BY doc_id
        |)""".stripMargin
-
-  // Quality-gate CTEs (twin of TextAnalysis.qualityGate, thresholds
-  // interpolated from the shared constants); expects `toks` in scope.
-  // Shared by text_quality_gate / corpus_curate.
 
   // Quality-gate CTEs (twin of TextAnalysis.qualityGate, thresholds
   // interpolated from the shared constants); expects `toks` in scope.
@@ -177,11 +164,6 @@ object QueryShared {
        |  FROM q
        |)""".stripMargin
   }
-
-  // DSIR CTEs shared by text_dsir_weights / corpus_select_dsir: hashed
-  // token buckets tagged with the inlined gate verdict, raw + target
-  // histograms (≤ DsirBuckets rows each), add-one-smoothed mean log-ratio
-  // per document — Curation.dsirWeights mirrored term for term.
 
   // DSIR CTEs shared by text_dsir_weights / corpus_select_dsir: hashed
   // token buckets tagged with the inlined gate verdict, raw + target
@@ -239,18 +221,12 @@ object QueryShared {
     }
 
   /** Spaced code-point symbols of a word expression. */
-
-  /** Spaced code-point symbols of a word expression. */
   private[queries] def bpeSpacedSql(wVar: String): String =
     s"' ' || array_to_string(regexp_extract_all($wVar, '.'), ' ') || ' '"
 
   /** Per-document lowercase `[a-z]+` word list (Bpe.words). */
-
-  /** Per-document lowercase `[a-z]+` word list (Bpe.words). */
   private[queries] val bpeWordsSql =
     "regexp_extract_all(lower(coalesce(text, '')), '[a-z]+')"
-
-  /** Encoded-symbol string of one word under the fixed table. */
 
   /** Encoded-symbol string of one word under the fixed table. */
   private[queries] val bpeWordSymsSql = s"trim(${bpeReplaceChain(bpeSpacedSql("w"))})"
@@ -271,9 +247,6 @@ object QueryShared {
   // exactly like the Spark loop, and ws{t} CTEs are MATERIALIZED (each is
   // referenced twice — next gradient + next update — so inlining would
   // expand the chain exponentially).
-
-  /** Design-matrix CTEs (qf): TextAnalysis.quality signals + inlined gate
-    * label, every feature rounded to 6 decimals on both engines. */
 
   /** Design-matrix CTEs (qf): TextAnalysis.quality signals + inlined gate
     * label, every feature rounded to 6 decimals on both engines. */
@@ -311,9 +284,6 @@ object QueryShared {
 
   /** The [[graft.ops.QualityModel.Steps]] unrolled GD updates; ends at
     * CTE `ws{Steps}` holding the final weight row (w0..w4). */
-
-  /** The [[graft.ops.QualityModel.Steps]] unrolled GD updates; ends at
-    * CTE `ws{Steps}` holding the final weight row (w0..w4). */
   private[queries] val qmTrainChainSql = {
     val d = graft.ops.QualityModel.Dim
     val dot = (0 until d).map(j => s"w$j*x$j").mkString(" + ")
@@ -336,13 +306,6 @@ object QueryShared {
     }.mkString
     s"""WITH $rawToksSql, $qmFeaturesSql, ws0 AS (SELECT $init)$steps"""
   }
-
-  /** Training replayed round by round: vocab{r} CTEs are MATERIALIZED —
-    * each is referenced twice (next round's pair count + next vocab), so
-    * inlining would expand the chain exponentially. Pair counts enumerate
-    * ALL adjacent positions via list index unnest; the argmax tiebreak
-    * (count desc, a, b) is binary-collation string order on both engines
-    * for the `[a-z]+` alphabet. */
 
   /** Training replayed round by round: vocab{r} CTEs are MATERIALIZED —
     * each is referenced twice (next round's pair count + next vocab), so
@@ -491,9 +454,6 @@ object QueryShared {
 
   private[queries] def cosSql(av: String, an: String, bv: String, bn: String): String =
     s"round(${dotSql(av, bv)} / ($an * $bn), 6)"
-
-  // IVF coarse cells: argmax (first-wins) of rounded dots against the
-  // seed-7 Rademacher vectors — twin of Similarity.ivfCell.
 
   // IVF coarse cells: argmax (first-wins) of rounded dots against the
   // seed-7 Rademacher vectors — twin of Similarity.ivfCell.

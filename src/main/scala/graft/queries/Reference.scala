@@ -26,15 +26,10 @@ object QueriesReference {
   }
 
   /** P1-P3, P8-P9: JSON serialize → parse → flatten round-trip. */
-
-  /** P1-P3, P8-P9: JSON serialize → parse → flatten round-trip. */
   private def parseReadings(s: SparkSession, dir: String): DataFrame = {
     val readings = StandIn.readingsFromEvents(StandIn.events(s, dir))
     Parse.jsonToReadings(Parse.readingsToJson(readings.drop("event_time")))
   }
-
-  /** A1-A4: tumbling 4-minute window, avg/min/max/count per sensor
-    * (reference: data_agregator.py:74-95; batch-bucket oracle per SURVEY §5.3). */
 
   /** A1-A4: tumbling 4-minute window, avg/min/max/count per sensor
     * (reference: data_agregator.py:74-95; batch-bucket oracle per SURVEY §5.3). */
@@ -51,15 +46,11 @@ object QueriesReference {
       valueCol = "value")
 
   /** P2: bare from_json field extraction. */
-
-  /** P2: bare from_json field extraction. */
   private def jsonParse(s: SparkSession, dir: String): DataFrame =
     StandIn.events(s, dir).select(
       col("event_id"),
       from_json(col("props"), org.apache.spark.sql.types.StructType.fromDDL("k INT"))
         .getField("k").alias("k"))
-
-  /** P9→P2: to_json/from_json round-trip is the identity. */
 
   /** P9→P2: to_json/from_json round-trip is the identity. */
   private def jsonRoundtrip(s: SparkSession, dir: String): DataFrame =
@@ -72,8 +63,6 @@ object QueriesReference {
               col("d.value").alias("value"))
 
   /** P4: timestamp → string → timestamp casts. */
-
-  /** P4: timestamp → string → timestamp casts. */
   private def castTimestamp(s: SparkSession, dir: String): DataFrame =
     StandIn.events(s, dir).select(
       col("event_id"),
@@ -81,15 +70,10 @@ object QueriesReference {
       date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").cast("timestamp").alias("ts_rt"))
 
   /** F4: SQL LIKE (reference: alert_detector.py:172-173,200). */
-
-  /** F4: SQL LIKE (reference: alert_detector.py:172-173,200). */
   private def filterLike(s: SparkSession, dir: String): DataFrame =
     StandIn.table(s, dir, "part")
       .where(col("p_type").like("ECO%"))
       .select(col("p_partkey"), col("p_name"), col("p_type"))
-
-  /** F2+F3: comparison predicates with boolean conjunction/disjunction
-    * (reference: alert_detector.py:107-153 rule guards). */
 
   /** F2+F3: comparison predicates with boolean conjunction/disjunction
     * (reference: alert_detector.py:107-153 rule guards). */
@@ -105,18 +89,9 @@ object QueriesReference {
     * declaratively (gaps-and-islands over lag windows) — an independent
     * cross-paradigm check of the state machine.
     */
-
-  /** Stateful lifecycle: flatMapGroupsWithState active→resolved transitions
-    * over the events stand-in. The oracle recomputes the same transitions
-    * declaratively (gaps-and-islands over lag windows) — an independent
-    * cross-paradigm check of the state machine.
-    */
   private def alertLifecycle(s: SparkSession, dir: String): DataFrame =
     AlertLifecycle.transitions(
       StandIn.readingsFromEvents(StandIn.events(s, dir))).toDF()
-
-  /** F5: severity isin filter — the mail-notifier predicate
-    * (reference: gestionnaire_mail.py:79-83), over real detected alerts. */
 
   /** F5: severity isin filter — the mail-notifier predicate
     * (reference: gestionnaire_mail.py:79-83), over real detected alerts. */

@@ -41,13 +41,6 @@ object QueriesSim {
   // pins the row COUNT and SimilaritySpec pins the recall floor; a
   // quantizer regression flips the unit test red instead of hiding behind
   // a rows-only count.
-
-  // Recall@k of the trained-IVF result vs the exact brute force, as one
-  // deterministic (hits, expected, recall) row over ONE shared prepared
-  // frame. Both sides are deterministic, so the driver's rows-only check
-  // pins the row COUNT and SimilaritySpec pins the recall floor; a
-  // quantizer regression flips the unit test red instead of hiding behind
-  // a rows-only count.
   private def simIvfRecall(s: SparkSession, dir: String): DataFrame =
     Similarity.ivfRecallReport(StandIn.embeddings(s, dir),
       IvfCells, iters = 3, k = TopK, nprobe = 2)
@@ -57,17 +50,7 @@ object QueriesSim {
   // top): measured 0.48 at nprobe=2/cells=8, deterministically. 0.4 is a
   // regression floor, not a quality claim — SimilaritySpec holds the 0.8
   // floor on clustered data, the regime IVF exists for.
-
-  // The synthetic embeddings are near-uniform, where IVF recall is
-  // structurally bounded near nprobe/cells (trained cells add a margin on
-  // top): measured 0.48 at nprobe=2/cells=8, deterministically. 0.4 is a
-  // regression floor, not a quality claim — SimilaritySpec holds the 0.8
-  // floor on clustered data, the regime IVF exists for.
   private val RecallFloor = 0.4
-
-  // Oracle-checked face of the recall report: (expected, floor_met) —
-  // expected derives from the oracle's own query-draw CTE, floor_met is
-  // pinned TRUE. A quantizer recall regression fails a hash-checked row.
 
   // Oracle-checked face of the recall report: (expected, floor_met) —
   // expected derives from the oracle's own query-draw CTE, floor_met is

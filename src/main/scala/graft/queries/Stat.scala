@@ -21,10 +21,6 @@ object QueriesStat {
   // The 100 TB default: HLL distincts, no Expand, no per-column reshuffle
   // of the fact table. Sketch output → rows-only driver check; the exact
   // twin above keeps the bit-for-bit oracle.
-
-  // The 100 TB default: HLL distincts, no Expand, no per-column reshuffle
-  // of the fact table. Sketch output → rows-only driver check; the exact
-  // twin above keeps the bit-for-bit oracle.
   private def profileEventsApprox(s: SparkSession, dir: String): DataFrame =
     Profile.profile(StandIn.events(s, dir), exact = false)
 
@@ -38,8 +34,6 @@ object QueriesStat {
 
   private def profileKeySkew(s: SparkSession, dir: String): DataFrame =
     Profile.keySkew(StandIn.events(s, dir), "event_type", SkewTopK)
-
-  // (column, is-numeric) of StandIn.events — drives the oracle's UNION.
 
   // (column, is-numeric) of StandIn.events — drives the oracle's UNION.
   private val ProfileEventCols = Seq(

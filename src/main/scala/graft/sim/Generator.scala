@@ -3,8 +3,6 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.Parse
-
 /** S5: deterministic twin of the reference's sensor simulator
   * (reference: simulators/sensor_simulator.py:15-146).
   *
@@ -217,7 +215,4 @@ object Generator {
       .select(col("value").alias("gen_id"), col("timestamp").alias("event_time"))
     readingsFrom(ids, seed)
   }
-
-  /** Wire-format messages (JSON strings), as the simulator's producer sends. */
-  def jsonStream(readings: DataFrame): DataFrame = Parse.readingsToJson(readings)
 }

@@ -34,17 +34,30 @@ class StreamingPipelineSpec extends SparkSpec {
       .stripMargin.replace("\n", "")
   }
 
+  /** The sink contract perfbench's catch-up resume relies on: the query
+    * keeps its unit name and commits its offset log under
+    * `<checkpointRoot>/<name>`.
+    */
+  private def assertCheckpointed(
+      query: org.apache.spark.sql.streaming.StreamingQuery,
+      conf: PipelineConfig, name: String): Unit = {
+    assert(query.name === name)
+    assert(new java.io.File(s"${conf.checkpointRoot}/$name/commits").isDirectory,
+      s"no commit log under ${conf.checkpointRoot}/$name")
+  }
+
   test("alert chain e2e: dual sink writes the same batch to jdbc and kafka") {
     import spark.implicits._
     val input = MemoryStream[String](spark)
-    val pipeline = new Pipeline(spark, cfg)
+    val conf = cfg
+    val pipeline = new Pipeline(spark, conf)
     val alerts = pipeline.alertsFrame(input.toDF().withColumnRenamed("value", "kafka_value")
       .select(col("kafka_value").alias("value")))
 
     val jdbcRows = mutable.Buffer[org.apache.spark.sql.Row]()
     val kafkaRows = mutable.Buffer[(String, String)]()
     val query = Sinks.alertsDualSink(
-      alerts, cfg,
+      alerts, conf,
       writeJdbc = df => jdbcRows.synchronized { jdbcRows ++= df.collect() },
       writeKafka = df => kafkaRows.synchronized {
         kafkaRows ++= df.collect().map(r =>
@@ -56,6 +69,7 @@ class StreamingPipelineSpec extends SparkSpec {
         readingJson("temperature", 22.0),          // no alert
         readingJson("humidity", 75.0, battery = 10)) // humidity_critical (priority)
       query.processAllAvailable()
+      assertCheckpointed(query, conf, "alerts_dual_sink")
 
       assert(jdbcRows.length === 2)
       assert(kafkaRows.length === 2)
@@ -220,40 +234,6 @@ class StreamingPipelineSpec extends SparkSpec {
       assert(r.getAs[java.sql.Timestamp]("event_time").toInstant.toString ===
         "2026-01-01T12:00:00Z")
     } finally query.stop()
-  }
-
-  test("archive round-trip: stream to parquet archive, replay through the alert chain") {
-    import spark.implicits._
-    val input = MemoryStream[String](spark)
-    val pipeline = new Pipeline(spark, cfg)
-    val archiveDir = Files.createTempDirectory("graft-archive").toString
-
-    // live half: JSON → flat readings → parquet archive
-    val q1 = io.Sinks.parquetArchive(
-      pipeline.readingsFrame(input.toDF()).drop("event_time"),
-      archiveDir, Files.createTempDirectory("graft-arch-ckpt").toString)
-    try {
-      input.addData(
-        readingJson("temperature", 32.5),
-        readingJson("humidity", 50.0))
-      q1.processAllAvailable()
-    } finally q1.stop()
-
-    // replay half: archive → streaming source → classify → memory sink
-    val replay = io.Sources.replayReadings(spark, archiveDir)
-    assert(replay.isStreaming)
-    val q2 = graft.ops.AlertRules.detect(replay)
-      .writeStream.format("memory").queryName("replay_sink")
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-replay-ckpt").toString)
-      .start()
-    try {
-      q2.processAllAvailable()
-      val alerts = spark.table("replay_sink").collect()
-      assert(alerts.length === 1) // only the 32.5 °C reading alerts
-      assert(alerts.head.getAs[String]("alert_type") === "temperature_critical")
-    } finally q2.stop()
   }
 
   test("streaming curation: redact → quality gate runs per-batch on a doc stream") {
@@ -477,10 +457,10 @@ class StreamingPipelineSpec extends SparkSpec {
     import spark.implicits._
     val input = MemoryStream[String](spark)
     val notifier = new InMemoryNotifier
-    val pipeline = new Pipeline(spark, cfg, notifier)
+    val conf = cfg
+    val pipeline = new Pipeline(spark, conf, notifier)
     val mailable = pipeline.mailableFrame(input.toDF())
-    val query = Sinks.notifierSink(mailable, cfg, notifier,
-      Files.createTempDirectory("graft-mail").toString)
+    val query = Sinks.notifierSink(mailable, conf, notifier)
     try {
       val alertJson =
         """{"sensor_id":"A_1_100_temperature","sensor_type":"temperature",
@@ -496,6 +476,7 @@ class StreamingPipelineSpec extends SparkSpec {
         .replace("\"severity\":\"critical\"", "\"severity\":\"info\"")
       input.addData(alertJson, infoJson)
       query.processAllAvailable()
+      assertCheckpointed(query, conf, "mail_notifier")
 
       val emails = notifier.emails
       assert(emails.length === 1) // info filtered out (F5)
@@ -516,8 +497,7 @@ class StreamingPipelineSpec extends SparkSpec {
     val notifier = new InMemoryNotifier
     val pipeline = new Pipeline(spark, cfg, notifier)
     val mailable = pipeline.mailableFrame(input.toDF())
-    val query = Sinks.notifierSink(mailable, cfg, notifier,
-      Files.createTempDirectory("graft-mail-storm").toString)
+    val query = Sinks.notifierSink(mailable, cfg, notifier)
     try {
       // Every row mailable — the misconfigured-threshold scenario where an
       // uncapped collect() would pull the whole batch onto the driver.
@@ -536,41 +516,6 @@ class StreamingPipelineSpec extends SparkSpec {
       query.processAllAvailable()
       assert(notifier.emails.length === Sinks.MaxEmailsPerBatch)
     } finally query.stop()
-  }
-
-  test("streaming windowed distinct: HLL state merges across batches, append on watermark") {
-    import graft.ops.Aggregates
-    import spark.implicits._
-    val input = MemoryStream[(Long, Timestamp, Long, String)](spark)
-    val events = input.toDF().toDF("event_id", "ts", "user_id", "event_type")
-    val q = Aggregates.windowedDistinct(events,
-        timeCol = "ts", idCol = "user_id", keys = Seq("event_type"),
-        windowDur = "1 hour", watermarkDelay = Some("1 minute"))
-      .writeStream.format("memory").queryName("dau_sink")
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-dau-ckpt").toString)
-      .start()
-    try {
-      def t(s: String) = Timestamp.valueOf(s)
-      // Two batches contribute to the SAME hour window: the sketch state
-      // must merge user 1's duplicate away across the trigger boundary.
-      input.addData(
-        (1L, t("2026-01-01 10:05:00"), 1L, "click"),
-        (2L, t("2026-01-01 10:10:00"), 2L, "click"))
-      q.processAllAvailable()
-      input.addData(
-        (3L, t("2026-01-01 10:20:00"), 1L, "click"), // duplicate user
-        (4L, t("2026-01-01 10:30:00"), 3L, "click"))
-      q.processAllAvailable()
-      assert(spark.table("dau_sink").count() === 0) // window still open
-      input.addData((5L, t("2026-01-01 11:05:00"), 9L, "view"))
-      q.processAllAvailable()
-      val rows = spark.table("dau_sink").collect()
-        .map(r => (r.getString(0), r.getLong(3), r.getLong(4)))
-      // HLL is exact at this cardinality: 3 distinct users, 4 events.
-      assert(rows.toSeq === Seq(("click", 3L, 4L)))
-    } finally q.stop()
   }
 
   test("streaming top-N: non-qualifying events keep a key alive past the idle horizon") {
@@ -662,40 +607,6 @@ class StreamingPipelineSpec extends SparkSpec {
     try {
       assert(q.awaitTermination(60000), "drain must self-terminate")
       assert(spark.table("drain_sink").count() === 2)
-    } finally q.stop()
-  }
-
-  test("anomaly monitor unit: raw JSON readings → per-type statistical outliers") {
-    import spark.implicits._
-    val input = MemoryStream[String](spark)
-    val pipeline = new Pipeline(spark, cfg)
-    val q = pipeline.anomalyFrame(input.toDF())
-      .writeStream.format("memory").queryName("anomaly_unit_sink")
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-anomaly-unit-ckpt").toString)
-      .start()
-    try {
-      // 30-reading baseline alternating 20/22 °C (variance > 0, all within
-      // the fixed-threshold engine's legal band), then a 100 °C departure:
-      // the adaptive screen flags what AlertRules' static thresholds also
-      // would here, but it learned the band from the data.
-      val baseline = (0 until 30).map(i => readingJson(
-        "temperature", if (i % 2 == 0) 20.0 else 22.0,
-        ts = f"2026-01-01T12:00:$i%02d.000000"))
-      input.addData(baseline: _*)
-      q.processAllAvailable()
-      assert(spark.table("anomaly_unit_sink").count() === 0) // warmup
-      input.addData(readingJson(
-        "temperature", 100.0, ts = "2026-01-01T12:01:00.000000"))
-      q.processAllAvailable()
-      val rows = spark.table("anomaly_unit_sink").collect()
-      assert(rows.length === 1)
-      val r = rows.head
-      assert(r.getAs[String]("sensor_type") === "temperature")
-      assert(r.getAs[Double]("value") === 100.0)
-      assert(r.getAs[Long]("n_seen") === 30L)
-      assert(r.getAs[Double]("z_score") > 3.0)
     } finally q.stop()
   }
 

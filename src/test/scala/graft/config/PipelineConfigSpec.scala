@@ -13,7 +13,6 @@ class PipelineConfigSpec extends AnyFunSuite {
     assert(cfg.jdbc.readingsTable === "sensor_readings")
     assert(cfg.jdbc.alertsTable === "alerts")
     assert(cfg.jdbc.aggregatesTable === "aggregated_stats")
-    assert(cfg.watermarkDelay === "1 minute")
   }
 
   test("reference .env keys are honored and compose into the JDBC url") {

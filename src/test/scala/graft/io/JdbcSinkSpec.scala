@@ -152,10 +152,11 @@ class JdbcSinkSpec extends SparkSpec {
 
     // End to end through the streaming surface.
     val input = MemoryStream[(String, Double)](spark)
-    val query = Sinks.jdbcIdempotentStream(
+    val query = Sinks.jdbcStream(
       input.toDF().toDF("sensor_id", "value"), cfg, cfg.aggregatesTable,
       checkpoint = Files.createTempDirectory("graft-idem-ckpt").toString,
-      queryName = "jdbc_idem_e2e")
+      queryName = "jdbc_idem_e2e",
+      writer = Sinks.idempotentBatchWriter(cfg, cfg.aggregatesTable))
     try {
       input.addData(("a", 1.0), ("b", 2.0))
       query.processAllAvailable()

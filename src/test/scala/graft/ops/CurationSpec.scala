@@ -78,23 +78,6 @@ class CurationSpec extends SparkSpec {
     assert(disjoint.count() === 0)
   }
 
-  test("writeCurated lays out language partitions that prune on read") {
-    import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("graft-curated")
-    Curation.writeCurated(
-      Curation.curate(docs((1L, good1), (2L, good1), (3L, good2))),
-      dir.toString)
-    // Directory layout is one partition per language...
-    assert(new java.io.File(s"$dir/predicted_lang=en").isDirectory)
-    // ...and a one-language read is partition-pruned at the scan.
-    val scan = spark.read.parquet(dir.toString)
-      .where(col("predicted_lang") === "en")
-      .queryExecution.executedPlan.toString
-      .linesIterator.find(_.contains("FileScan")).get
-    assert(scan.contains("PartitionFilters: [isnotnull(predicted_lang"),
-      s"partition filter missing:\n$scan")
-  }
-
   test("curate = gate-passing cluster keepers with language and tokens") {
     val rows = Curation.curate(docs(
       (1L, good1), (2L, good1), (3L, good2), (4L, "short")))
@@ -558,41 +541,6 @@ class CurationSpec extends SparkSpec {
     val n1 = Seq((1L, null: String)).toDF("doc_id", "text")
     val n2 = Seq((1L, "")).toDF("doc_id", "text")
     assert(Curation.snapshotDiff(n1, n2).head().getString(1) === "unchanged")
-  }
-
-  test("exportJsonl: sharded gzip JSONL matches the shuffleShards manifest") {
-    import java.io.{BufferedReader, InputStreamReader, FileInputStream}
-    import java.util.zip.GZIPInputStream
-    import spark.implicits._
-    val docs = (1L to 40L).map(i => (i, s"doc body $i")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonl").toString
-    Curation.exportJsonl(docs, dir, nShards = 4)
-    // Round-trip: every doc present, shard directory = manifest shard.
-    val back = spark.read.json(dir)
-      .select("doc_id", "shard").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val manifest = Curation.shuffleShards(docs, 4).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
-    assert(back.size === 40)
-    manifest.foreach { case (id, shard, _) => assert(back(id) === shard) }
-    // In-file LINE order equals the manifest's pos order per shard: one
-    // gzip part per shard directory, read sequentially.
-    val perShard = manifest.groupBy(_._2)
-    perShard.foreach { case (shard, rows) =>
-      val part = new java.io.File(s"$dir/shard=$shard").listFiles()
-        .filter(_.getName.endsWith(".json.gz")) match {
-        case Array(one) => one
-        case many => fail(s"want ONE file per shard, got ${many.length}")
-      }
-      val in = new BufferedReader(new InputStreamReader(
-        new GZIPInputStream(new FileInputStream(part))))
-      val fileIds = Iterator.continually(in.readLine()).takeWhile(_ != null)
-        .map(l => "\"doc_id\":(\\d+)".r.findFirstMatchIn(l).get.group(1).toLong)
-        .toList
-      in.close()
-      assert(fileIds === rows.sortBy(_._3).map(_._1).toList,
-        s"shard $shard lines must follow manifest pos order")
-    }
   }
 
   test("assignStableIds: bucketed two-level ranking equals the naive global one") {

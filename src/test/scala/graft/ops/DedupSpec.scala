@@ -305,49 +305,6 @@ class DedupSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("streaming line dedup: first copy wins across micro-batches, " +
-      "short lines bypass state, docs rebuild per batch") {
-    import java.sql.Timestamp
-    import java.nio.file.Files
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    def ts(s: String) = Timestamp.valueOf(s)
-    val input = MemoryStream[(Long, String, Timestamp)](spark)
-    val stream = input.toDF().toDF("doc_id", "text", "event_time")
-      .withWatermark("event_time", "10 minutes")
-    val rebuilt = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, String)]
-    val query = Dedup.streamingLineDedup(stream, minChars = 10)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-sline").toString)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        Dedup.rebuildFromKeptLines(batch).collect().foreach { r =>
-          rebuilt += ((r.getAs[Long]("doc_id"), r.getAs[Long]("n_dropped"),
-            r.getAs[String]("text_dedup")))
-        }: Unit
-      }
-      .start()
-    try {
-      val banner = "accept all cookies to continue"
-      // Doc 1 introduces the banner; its short line ("ok") is ineligible.
-      input.addData((1L, s"$banner\nunique first body line\nok",
-        ts("2026-01-01 10:00:00")))
-      query.processAllAvailable()
-      // Doc 2 repeats the banner (dropped: first-wins) and, crucially,
-      // repeats its own SHORT line twice (both kept — ineligible lines
-      // never enter state).
-      input.addData((2L, s"$banner\nanother unique body line\nok\nok",
-        ts("2026-01-01 10:01:00")))
-      query.processAllAvailable()
-      val byDoc = rebuilt.map(t => t._1 -> ((t._2, t._3))).toMap
-      assert(byDoc(1L) === ((0L,
-        s"$banner\nunique first body line\nok")))
-      assert(byDoc(2L) === ((1L, "another unique body line\nok\nok")))
-    } finally query.stop()
-  }
-
   test("NULL text behaves as an empty document, not a dropped row") {
     val d = docs((1L, null), (2L, "a b c d"))
     val grams = Dedup.shingleSets(d).collect()

@@ -21,47 +21,4 @@ class ZorderSpec extends SparkSpec {
     assert(grid.distinct.length === 256)
     assert(grid.min === 0L && grid.max === 255L)
   }
-
-  test("writeZordered: files tile the curve — disjoint zkey ranges, both dims bounded per file") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
-    val data = (for (a <- 0 until 64; b <- 0 until 64)
-      yield (a.toLong * 64 + b, a.toLong, b.toLong)).toDF("id", "a", "b")
-    Zorder.writeZordered(data, col("a"), col("b"), dir, files = 8, bits = 6)
-    val back = spark.read.parquet(dir)
-    assert(back.count() === 4096L)
-    // Per-file key ranges must not overlap (range partitioning), and each
-    // file must cover a BOUNDED rectangle of (a, b) — the property that
-    // makes min-max pruning work on either dimension.
-    val stats = back
-      .withColumn("f", input_file_name())
-      .withColumn("z", Zorder.zkey(col("a"), col("b"), bits = 6))
-      .groupBy("f")
-      .agg(min("z").alias("zmin"), max("z").alias("zmax"),
-        (max("a") - min("a")).alias("aspan"),
-        (max("b") - min("b")).alias("bspan"))
-      .collect()
-    assert(stats.length > 1)
-    val ranges = stats.map(r =>
-      (r.getAs[Long]("zmin"), r.getAs[Long]("zmax"))).sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Array((_, hi), (lo, _)) => assert(hi < lo, s"overlapping files")
-      case _ =>
-    }
-    // Locality, stated exactly: a file is a tight tile (both spans ≤ 33)
-    // UNLESS its key range straddles one of the 3 interior top-level
-    // curve boundaries (multiples of 1024 in the 12-bit key space) —
-    // range-partition SAMPLING places cut points nondeterministically, so
-    // which files straddle varies run to run, but at most 3 of them can.
-    // A single-dimension sort would give EVERY file a full 0..63 span on
-    // the other dim.
-    val loose = stats.count(r =>
-      math.max(r.getAs[Long]("aspan"), r.getAs[Long]("bspan")) > 33)
-    assert(loose <= 3,
-      stats.map(r => (r.getAs[Long]("aspan"), r.getAs[Long]("bspan"))).toSeq
-        .toString)
-    // Majority of files must be tight rectangles — the property a
-    // single-dim sort cannot produce on this grid.
-    assert(stats.length - loose > stats.length / 2)
-  }
 }

