@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -101,7 +103,7 @@ final class Pipeline(
   private val started =
     scala.collection.mutable.ArrayBuffer.empty[StreamingQuery]
 
-  private def track(q: StreamingQuery): StreamingQuery =
+  private[graft] def track(q: StreamingQuery): StreamingQuery =
     synchronized { started += q; q }
 
   /** Start all four units (reference: main.py:24-44). */
@@ -116,12 +118,22 @@ final class Pipeline(
     try spark.streams.awaitAnyTermination()
     finally stopAll()
 
-  /** Stop every query this pipeline started (and only those). */
+  /** Stop every query this pipeline started (and only those). A query
+    * that fails to stop is logged and the rest are still stopped; a fatal
+    * error or an interrupt is rethrown once every stop has been tried.
+    */
   def stopAll(): Unit = synchronized {
+    var fatal: Throwable = null
     started.foreach { q =>
       try q.stop()
-      catch { case _: Throwable => () }
+      catch {
+        case NonFatal(e) =>
+          println(s"[pipeline] failed to stop ${q.name}: $e")
+        case e: Throwable =>
+          if (fatal == null) fatal = e
+      }
     }
     started.clear()
+    if (fatal != null) throw fatal
   }
 }

@@ -15,6 +15,15 @@ import graft.ops.AlertPayload
   * silently drops data). With checkpoints + append-mode JDBC writes the
   * pipeline is at-least-once into idempotent-keyed tables; duplicates on
   * retry are possible and documented, loss is not.
+  *
+  * Jobs per micro-batch (SURVEY §2.9.5): a sink runs only the jobs its
+  * writes need, with no emptiness probe in front of them, because every
+  * body below is correct on an empty frame. An alert-free batch runs a
+  * zero-row JDBC append (Spark's writer opens no connection for an empty
+  * partition, so only the driver-side table check runs) and an empty Kafka
+  * write; an empty batch against a missing table creates it with the DDL
+  * the first non-empty write would have used; `idempotentBatchWriter`
+  * records its marker for an empty batch too.
   */
 object Sinks {
 
@@ -38,21 +47,22 @@ object Sinks {
   /** The one `foreachBatch` starter behind every sink below. A query is
     * one checkpointed unit with its own offset log, so the name and the
     * checkpoint travel together: append mode, checkpoint at
-    * `<checkpointRoot>/<name>`, and `body` runs only on a non-empty batch
-    * (A5 + K6: `isEmpty` scans at most one partition-row, unlike the
-    * reference's double `count()`, SURVEY §2.9.5).
+    * `<checkpointRoot>/<name>`, and `body` runs on every batch, empty ones
+    * included (A5 + K6, SURVEY §2.9.5). The reference guards each write
+    * with a double `count()`; any emptiness probe, even a one-row
+    * `limit(1)` check, is one more job that re-plans and re-reads the
+    * batch.
+    * Bodies must therefore be correct on an empty frame, as the JDBC,
+    * Kafka and mail bodies below are (object header).
     */
   private def startForeachBatch(
-      stream: DataFrame, name: String, checkpointRoot: String, what: String)(
+      stream: DataFrame, name: String, checkpointRoot: String)(
       body: (DataFrame, Long) => Unit): StreamingQuery =
     stream.writeStream
       .queryName(name)
       .outputMode("append")
       .option("checkpointLocation", s"$checkpointRoot/$name")
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        if (df.isEmpty) log(s"[batch $batchId] no $what to write")
-        else body(df, batchId)
-      }
+      .foreachBatch(body)
       .start()
 
   private def log(msg: String): Unit = println(msg)
@@ -70,7 +80,7 @@ object Sinks {
       writer: (DataFrame, Long) => Unit = null): StreamingQuery = {
     val write: (DataFrame, Long) => Unit =
       if (writer != null) writer else (df, _) => jdbcAppend(df, jdbc, table)
-    startForeachBatch(stream, queryName, checkpoint, table)(write)
+    startForeachBatch(stream, queryName, checkpoint)(write)
   }
 
   /** Replay-safe JDBC batch writer — the commit-marker upgrade of plain
@@ -185,13 +195,12 @@ object Sinks {
           .option("kafka.bootstrap.servers", cfg.kafka.bootstrapServers)
           .option("topic", cfg.kafka.alertTopic)
           .save()
-    startForeachBatch(alerts, "alerts_dual_sink", cfg.checkpointRoot,
-        "alerts") { (df, batchId) =>
+    startForeachBatch(alerts, "alerts_dual_sink", cfg.checkpointRoot) {
+        (df, _) =>
       df.persist()
       try {
         jdbcW(df)
         kafkaW(AlertPayload.toKafka(df))
-        log(s"[batch $batchId] wrote alerts to jdbc+kafka")
       } finally df.unpersist()
     }
   }
@@ -217,9 +226,13 @@ object Sinks {
       cfg: PipelineConfig,
       notifier: AlertNotifier): StreamingQuery = {
     val recipient = cfg.smtp.recipient
-    startForeachBatch(mailableAlerts, "mail_notifier", cfg.checkpointRoot,
-        "mailable alerts") { (df, batchId) =>
-      val sent = df.limit(MaxEmailsPerBatch).collect()
+    startForeachBatch(mailableAlerts, "mail_notifier", cfg.checkpointRoot) {
+        (df, batchId) =>
+      // One task scans the partitions in order and stops at the cap, so
+      // the same <= cap rows reach the driver in one job; a bare
+      // `limit().collect()` takes a second job whenever the first
+      // partition holds fewer rows than the cap.
+      val sent = df.coalesce(1).limit(MaxEmailsPerBatch).collect()
       sent.foreach { row: Row =>
         notifier.send(AlertEmail.fromAlertRow(row, recipient))
       }

@@ -2,11 +2,15 @@ package graft
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import java.util.concurrent.ConcurrentHashMap
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, MicroBatchExecution, StreamExecution}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.functions._
 
 import graft.config.PipelineConfig
@@ -33,6 +37,18 @@ class StreamingPipelineSpec extends SparkSpec {
        |"metadata":{"battery_level":$battery,"signal_strength":$signal}}"""
       .stripMargin.replace("\n", "")
   }
+
+  /** An iot-alert topic payload the mail notifier accepts. */
+  private val criticalAlertJson =
+    """{"sensor_id":"A_1_100_temperature","sensor_type":"temperature",
+      |"timestamp":"2026-01-01T12:00:00.000000",
+      |"location":{"building":"A","floor":1,"room":100},
+      |"metadata":{"battery_level":87,"signal_strength":-55},
+      |"alert_type":"temperature_critical","severity":"critical",
+      |"threshold_value":30,"actual_value":32.5,
+      |"message":"Température CRITIQUE (>30°C ou <15°C)",
+      |"triggered_at":"2026-01-01T12:00:00.000000","status":"active"}"""
+      .stripMargin.replace("\n", "")
 
   /** The sink contract perfbench's catch-up resume relies on: the query
     * keeps its unit name and commits its offset log under
@@ -82,12 +98,139 @@ class StreamingPipelineSpec extends SparkSpec {
         Set("A_1_100_temperature", "A_1_100_humidity"))
       assert(kafkaRows.forall(_._2.contains("\"location\":{\"building\":\"A\"")))
 
-      // empty batch: neither writer called again
+      // alert-free batch: no rows added to either sink
       val (j0, k0) = (jdbcRows.length, kafkaRows.length)
       input.addData(readingJson("temperature", 22.0))
       query.processAllAvailable()
       assert(jdbcRows.length === j0 && kafkaRows.length === k0)
     } finally query.stop()
+  }
+
+  /** Counts the Spark jobs of each streaming micro-batch, keyed by the
+    * query id and batch id Spark sets as local properties on every job the
+    * batch starts. A sentinel job started after the batch returns marks the
+    * point where the listener bus has delivered all of the batch's events.
+    */
+  private final class BatchJobs extends SparkListener {
+    private val SentinelKey = "graft.test.sentinel"
+    private val started = new ConcurrentHashMap[Int, (String, String)]()
+    private val ended = ConcurrentHashMap.newKeySet[Int]()
+    private val sentinels = ConcurrentHashMap.newKeySet[String]()
+    private val sentinelJobs = new ConcurrentHashMap[Int, String]()
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).foreach { p =>
+        Option(p.getProperty(SentinelKey)).foreach(sentinelJobs.put(e.jobId, _))
+        Option(p.getProperty(StreamExecution.QUERY_ID_KEY)).foreach { q =>
+          started.put(e.jobId,
+            (q, p.getProperty(MicroBatchExecution.BATCH_ID_KEY)))
+        }
+      }
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+      ended.add(e.jobId)
+      Option(sentinelJobs.get(e.jobId)).foreach(sentinels.add)
+    }
+
+    /** Jobs batch `batchId` of `query` ran, once all of them have ended. */
+    def jobsOf(query: StreamingQuery, batchId: Long): Int = {
+      val mark = java.util.UUID.randomUUID().toString
+      val sc = spark.sparkContext
+      sc.setLocalProperty(SentinelKey, mark)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(SentinelKey, null)
+      val key = (query.id.toString, batchId.toString)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      def jobs = started.asScala.collect { case (j, `key`) => j }.toSet
+      while (!(sentinels.contains(mark) && jobs.forall(ended.contains))) {
+        assert(System.nanoTime() < deadline,
+          s"job events of batch $batchId never arrived")
+        Thread.sleep(20)
+      }
+      jobs.size
+    }
+  }
+
+  /** Runs `start`'s query over one non-empty batch and returns the number
+    * of Spark jobs that batch ran.
+    */
+  private def jobsPerBatch(input: MemoryStream[String], rows: Seq[String])(
+      start: => StreamingQuery): Int = {
+    val jobs = new BatchJobs
+    spark.sparkContext.addSparkListener(jobs)
+    val query = start
+    try {
+      input.addData(rows)
+      query.processAllAvailable()
+      jobs.jobsOf(query, 0L)
+    } finally {
+      query.stop()
+      spark.sparkContext.removeSparkListener(jobs)
+    }
+  }
+
+  test("per-batch job budget: each sink runs only the jobs its writes need") {
+    import spark.implicits._
+    val conf = cfg
+    val pipeline = new Pipeline(spark, conf, new InMemoryNotifier)
+    val readings = Seq(
+      readingJson("temperature", 32.5),
+      readingJson("temperature", 22.0),
+      readingJson("humidity", 75.0, battery = 10))
+
+    // Persistence: the append is the batch's one job.
+    val persistIn = MemoryStream[String](spark, 3)
+    assert(jobsPerBatch(persistIn, readings) {
+      Sinks.jdbcStream(pipeline.readingsFrame(persistIn.toDF()),
+        conf.jdbc, conf.jdbc.readingsTable,
+        Files.createTempDirectory("graft-budget-persist").toString,
+        "budget_persistence", writer = (df, _) => df.collect())
+    } === 1)
+
+    // Alerts: the JDBC write, then the Kafka write from the persisted batch.
+    val alertsIn = MemoryStream[String](spark, 3)
+    assert(jobsPerBatch(alertsIn, readings) {
+      Sinks.alertsDualSink(pipeline.alertsFrame(alertsIn.toDF()), conf,
+        writeJdbc = _.collect(), writeKafka = _.collect())
+    } === 2)
+
+    // Mail under the cap: one collect job, although the first partition
+    // holds fewer rows than the cap.
+    val mailIn = MemoryStream[String](spark, 3)
+    val notifier = new InMemoryNotifier
+    assert(jobsPerBatch(mailIn, Seq.fill(6)(criticalAlertJson)) {
+      Sinks.notifierSink(pipeline.mailableFrame(mailIn.toDF()), conf, notifier)
+    } === 1)
+    assert(notifier.emails.length === 6)
+  }
+
+  test("stopAll tries every stop, then rethrows the first fatal error") {
+    import java.lang.reflect.{InvocationHandler, Method, Proxy}
+    val stopped = mutable.Buffer[String]()
+    def query(name: String, onStop: () => Unit): StreamingQuery =
+      Proxy.newProxyInstance(getClass.getClassLoader,
+        Array(classOf[StreamingQuery]), new InvocationHandler {
+          def invoke(p: AnyRef, m: Method, args: Array[AnyRef]): AnyRef =
+            m.getName match {
+              case "name" => name
+              case "stop" => onStop(); stopped += name; null
+              case other  => throw new UnsupportedOperationException(other)
+            }
+        }).asInstanceOf[StreamingQuery]
+    val pipeline = new Pipeline(spark, cfg)
+    // Unchecked fatal errors: the proxy would wrap an undeclared checked
+    // InterruptedException into a non-fatal UndeclaredThrowableException.
+    val fatal = new OutOfMemoryError("stop failed")
+    pipeline.track(query("a", () => throw fatal))
+    pipeline.track(query("b", () => throw new IllegalStateException("b")))
+    pipeline.track(query("c", () => ()))
+    pipeline.track(query("d", () => throw new LinkageError("later")))
+    val thrown = intercept[OutOfMemoryError](pipeline.stopAll())
+    assert(thrown eq fatal)
+    assert(stopped === Seq("c"))
+    // `started` was cleared: a second stopAll has nothing left to stop.
+    pipeline.stopAll()
+    assert(stopped === Seq("c"))
   }
 
   test("windowed aggregation: append mode emits a window only after the watermark passes") {
@@ -165,7 +308,6 @@ class StreamingPipelineSpec extends SparkSpec {
       // custom state-operator metrics (e.g. rocksdbGetCount).
       val metrics = query.lastProgress.stateOperators.apply(0)
         .customMetrics.keySet()
-      import scala.jdk.CollectionConverters._
       assert(metrics.asScala.exists(_.startsWith("rocksdb")),
         s"expected rocksdb state metrics, got: $metrics")
     } finally {
@@ -462,19 +604,9 @@ class StreamingPipelineSpec extends SparkSpec {
     val mailable = pipeline.mailableFrame(input.toDF())
     val query = Sinks.notifierSink(mailable, conf, notifier)
     try {
-      val alertJson =
-        """{"sensor_id":"A_1_100_temperature","sensor_type":"temperature",
-          |"timestamp":"2026-01-01T12:00:00.000000",
-          |"location":{"building":"A","floor":1,"room":100},
-          |"metadata":{"battery_level":87,"signal_strength":-55},
-          |"alert_type":"temperature_critical","severity":"critical",
-          |"threshold_value":30,"actual_value":32.5,
-          |"message":"Température CRITIQUE (>30°C ou <15°C)",
-          |"triggered_at":"2026-01-01T12:00:00.000000","status":"active"}"""
-          .stripMargin.replace("\n", "")
-      val infoJson = alertJson
+      val infoJson = criticalAlertJson
         .replace("\"severity\":\"critical\"", "\"severity\":\"info\"")
-      input.addData(alertJson, infoJson)
+      input.addData(criticalAlertJson, infoJson)
       query.processAllAvailable()
       assertCheckpointed(query, conf, "mail_notifier")
 
@@ -647,7 +779,6 @@ class StreamingPipelineSpec extends SparkSpec {
       input.addData((1L, t("2026-01-01 10:05:00"), "click"))
       q2.processAllAvailable()
       val base = t("2026-01-01 10:00:00").getTime / 1000
-      import scala.jdk.CollectionConverters._
       val rows = received.asScala.toSeq
       assert(afterFirst === 1 && rows.head === ((1L, 1, base)))
       // Stage 2 requires the restored stage-1 state: a click with no

@@ -225,4 +225,36 @@ class JdbcSinkSpec extends SparkSpec {
       assert(readBack(cfg, cfg.aggregatesTable).count() === 3L)
     } finally query.stop()
   }
+
+  test("jdbcStream default writer: an empty batch writes nothing and still commits") {
+    import spark.implicits._
+    val cfg = derbyCfg()
+    val input = MemoryStream[(String, Double)](spark)
+    // Negative readings are filtered out, so such a batch reaches the sink
+    // as an empty frame; the sink has no emptiness probe in front of it.
+    val stream = input.toDF().toDF("sensor_id", "value").where($"value" >= 0)
+    val ckpt = Files.createTempDirectory("graft-jdbc-empty-ckpt").toString
+    val query = Sinks.jdbcStream(stream, cfg, cfg.aggregatesTable,
+      checkpoint = ckpt, queryName = "jdbc_empty")
+    def committed(batchId: Long) =
+      new java.io.File(s"$ckpt/jdbc_empty/commits/$batchId").isFile
+    try {
+      // Batch 0 is empty against a missing table: the zero-row append
+      // creates the table.
+      input.addData(("neg", -1.0))
+      query.processAllAvailable()
+      assert(committed(0))
+      assert(readBack(cfg, cfg.aggregatesTable).count() === 0L)
+
+      input.addData(("s1", 1.5), ("s2", 2.5))
+      query.processAllAvailable()
+      assert(readBack(cfg, cfg.aggregatesTable).count() === 2L)
+
+      // An empty batch against the existing table leaves its rows alone.
+      input.addData(("neg", -2.0))
+      query.processAllAvailable()
+      assert(committed(2))
+      assert(readBack(cfg, cfg.aggregatesTable).count() === 2L)
+    } finally query.stop()
+  }
 }
